@@ -822,7 +822,9 @@ object Pipeline {
           .outputMode(s.optionOr("outputMode", "append")).trigger(trigger).start()
       case "upsert" =>
         // A5 JDBC-sink-shaped upsert: keyed MERGE per micro-batch with
-        // CDC delete semantics (pk/order/deleted options)
+        // CDC delete semantics (pk/order/deleted options). Each epoch is
+        // one newest-wins pass over snapshot ∪ batch: one hash exchange on
+        // pk, about the cost of the copy-on-write snapshot rewrite it feeds
         val table = new graft.sinks.ParquetKeyedTable(
           s.option("path"), s.option("pk").split(",").map(_.trim).toSeq)
         val deleted = deletedPredicate(df, s)

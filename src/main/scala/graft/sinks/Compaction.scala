@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -84,13 +84,15 @@ object Compaction {
     Files.write(tmp, snap.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, pointer(root), StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
-    prev.foreach { p =>
-      val dir = Paths.get(p)
-      if (Files.exists(dir)) {
-        Files.walk(dir).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => Files.delete(f))
-      }
-    }
+    prev.foreach(p => deleteTree(Paths.get(p)))
     nFiles
   }
+
+  /** Recursively delete a snapshot directory, if it exists. */
+  private[sinks] def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      val walk = Files.walk(dir)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+      finally walk.close()
+    }
 }

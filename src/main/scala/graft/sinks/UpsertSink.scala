@@ -3,8 +3,11 @@ package graft.sinks
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Relational
 
@@ -30,17 +33,31 @@ import graft.operators.Relational
  * effective exactly-once, the same trick the reference's offset-tracking
  * topics implement (docker-compose.yaml:133-135).
  *
- * Scale notes: the merge is one anti-join (current ⋉ batch keys) + one
- * union — both shuffle on the key columns only. A real deployment
- * backs this with a table format that supports row-level MERGE
- * (Delta/Iceberg `MERGE INTO`, or JDBC `INSERT ... ON CONFLICT` per
- * dialect in `foreachBatch`); the semantics — and this class's tests —
- * are format-independent.
+ * Scale notes: one merge is one newest-wins pass over snapshot ∪ batch:
+ * snapshot rows are tagged `src = 0`, batch rows `src = 1`, and
+ * `latestStatePerKey` keeps per key the row ranked first by `src` desc,
+ * then the caller's order — so an epoch costs one scan of the batch and
+ * of the snapshot, one hash exchange on the key, one sort and one write.
+ * The exchange moves the whole snapshot, about what the copy-on-write
+ * rewrite of that snapshot already costs. A real deployment backs this
+ * with a table format that supports row-level MERGE (Delta/Iceberg
+ * `MERGE INTO`, or JDBC `INSERT ... ON CONFLICT` per dialect in
+ * `foreachBatch`); the semantics — and this class's tests — are
+ * format-independent.
+ *
+ * Disk: after each pointer swap every snapshot older than the one just
+ * superseded is dropped (`Compaction`'s swap-then-drop protocol), so the
+ * current and the previous snapshot are all that stay on disk.
  */
 class ParquetKeyedTable(val path: String, val keyCols: Seq[String]) {
   require(keyCols.nonEmpty, "keyCols must be non-empty")
 
   private def pointer: Path = Paths.get(path, "_CURRENT")
+
+  /** (version dir, schema) of the snapshot this instance last committed:
+    * reading it back needs no schema inference, which is a Spark job of
+    * its own per epoch. */
+  private var committed: Option[(String, StructType)] = None
 
   /** (version dir, last applied epoch) or None before the first commit. */
   private def current(): Option[(String, Long)] =
@@ -52,13 +69,25 @@ class ParquetKeyedTable(val path: String, val keyCols: Seq[String]) {
 
   /** Latest committed snapshot, or None before the first commit. */
   def read(spark: SparkSession): Option[DataFrame] =
-    current().map { case (v, _) => spark.read.parquet(s"$path/$v") }
+    current().map { case (v, _) =>
+      committed match {
+        case Some((`v`, schema)) => spark.read.schema(schema).parquet(s"$path/$v")
+        case _                   => spark.read.parquet(s"$path/$v")
+      }
+    }
 
   def lastEpoch: Option[Long] = current().map(_._2)
 
   /**
    * MERGE one micro-batch into the table. Idempotent per `epochId`:
    * a replay of an already-committed epoch is a no-op.
+   *
+   * Per key, the batch's newest row replaces the snapshot's row, or
+   * removes the key when it matches `isDelete`. A row whose key has a
+   * null column never matches: the snapshot keeps its null-key rows and
+   * the batch adds its newest one. The snapshot's columns win; batch-only
+   * columns may steer `orderCols` and `isDelete` but are not stored, and
+   * a batch lacking a snapshot column fails.
    *
    * @param batch     the micro-batch (schema must include keyCols)
    * @param epochId   foreachBatch epoch (or any monotonically increasing id)
@@ -69,26 +98,51 @@ class ParquetKeyedTable(val path: String, val keyCols: Seq[String]) {
    */
   def merge(batch: DataFrame, epochId: Long, orderCols: Seq[Column],
             isDelete: Column): Unit = {
-    if (current().exists(_._2 >= epochId)) return // replayed epoch: no-op
+    val prev = current()
+    if (prev.exists(_._2 >= epochId)) return // replayed epoch: no-op
 
-    val spark = batch.sparkSession
-    val latest = Relational.latestStatePerKey(batch, keyCols, orderCols)
-    val upserts = latest.filter(!coalesce(isDelete, lit(false)))
-    val merged = read(spark) match {
-      case Some(cur) =>
-        // current rows whose key is untouched by this batch + the batch's
-        // surviving upserts (deletes simply don't come back)
-        cur.join(latest.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(upserts.select(cur.columns.map(col): _*))
-      case None => upserts
+    val snapshot = read(batch.sparkSession)
+    val batchOnly = snapshot.fold(Array.empty[String])(s => batch.columns.diff(s.columns))
+    val taken = (batch.columns ++ snapshot.fold(Array.empty[String])(_.columns)).toSet
+    def fresh(base: String) = Iterator.from(0).map(i => s"$base$i").find(!taken(_)).get
+    val src = fresh("__src")
+    val nullKeyId = fresh("__null_key_id")
+    val batchRows = batch.withColumn(src, lit(1)).withColumn(nullKeyId, lit(null).cast("long"))
+    // Batch-only columns enter as nulls on snapshot rows; a snapshot column
+    // the batch lacks fails the union. Each null-key snapshot row gets a
+    // window partition of its own, so it neither absorbs nor is absorbed
+    // by another null-key row.
+    val rows = snapshot.fold(batchRows) { snap =>
+      batchOnly.foldLeft(snap)((df, c) => df.withColumn(c, lit(null)))
+        .withColumn(src, lit(0))
+        .withColumn(nullKeyId,
+          when(keyCols.map(k => col(k).isNull).reduce(_ || _), monotonically_increasing_id()))
+        .unionByName(batchRows)
     }
+    val merged = Relational
+      .latestStatePerKey(rows, keyCols :+ nullKeyId, col(src).desc +: orderCols)
+      .filter(!(col(src) === 1 && coalesce(isDelete, lit(false))))
+      .drop((Seq(src, nullKeyId) ++ batchOnly): _*)
 
     val version = s"v$epochId"
     merged.write.mode("overwrite").parquet(s"$path/$version")
     val tmp = Paths.get(path, s"_CURRENT.tmp$epochId")
     Files.write(tmp, s"$version $epochId".getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, pointer, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE): Unit
+      StandardCopyOption.ATOMIC_MOVE)
+    committed = Some((version, merged.schema))
+    prev.foreach { case (superseded, _) => dropOlderThan(superseded) }
+  }
+
+  /** Delete every `v<N>` snapshot directory older than `version`. */
+  private def dropOlderThan(version: String): Unit = {
+    val keep = version.drop(1).toLong
+    val listing = Files.list(Paths.get(path))
+    val entries = try listing.iterator().asScala.toList finally listing.close()
+    entries.filter { p =>
+      val name = p.getFileName.toString
+      name.matches("v\\d+") && name.drop(1).toLong < keep
+    }.foreach(Compaction.deleteTree)
   }
 
   /** Adapter for `writeStream.foreachBatch(table.foreachBatchMerge(...))`. */

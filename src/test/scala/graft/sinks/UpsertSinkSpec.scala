@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,6 +17,17 @@ class UpsertSinkSpec extends SparkTestBase with Matchers {
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  private val rowSchema = StructType(Seq(
+    StructField("id", LongType), StructField("name", StringType)))
+
+  /** One Debezium JSON envelope of a `rowSchema` row. */
+  private def env(id: Long, name: String, op: String, tsMs: Long): String = {
+    val row = s"""{"id": $id, "name": "$name"}"""
+    val (before, after) =
+      if (op == "d") (row, "null") else ("null", row)
+    s"""{"before": $before, "after": $after, "source": {"ts_ms": $tsMs, "lsn": $tsMs}, "op": "$op", "ts_ms": $tsMs}"""
+  }
 
   private def snapshot(t: ParquetKeyedTable): Map[Long, (String, String)] =
     t.read(spark).get.collect()
@@ -52,6 +64,74 @@ class UpsertSinkSpec extends SparkTestBase with Matchers {
     t.merge(batch((2L, "b3", 10L, "false"), (2L, "gone", 11L, "true")),
       2L, order, isDelete)
     snapshot(t).view.mapValues(_._1).toMap shouldBe Map(1L -> "a9")
+
+    // epoch 3, columns: a batch row replaces the snapshot's row whatever
+    // their order values; a batch-only column still breaks the tie
+    // between the two id-5 rows but is not stored
+    val byExtra = Seq(col("ver").desc, col("extra").desc)
+    t.merge(Seq((1L, "a1", 1L, "false", "p"), (5L, "x", 1L, "false", "p"),
+        (5L, "y", 1L, "false", "q")).toDF("id", "name", "ver", "__deleted", "extra"),
+      3L, byExtra, isDelete)
+    snapshot(t).view.mapValues(_._1).toMap shouldBe Map(1L -> "a1", 5L -> "y")
+    t.read(spark).get.columns shouldBe Array("id", "name", "ver", "__deleted")
+
+    // a batch lacking a snapshot column fails and commits nothing
+    an[AnalysisException] should be thrownBy
+      t.merge(Seq((6L, "z")).toDF("id", "name"), 4L, Seq(col("name").desc), lit(false))
+    t.lastEpoch shouldBe Some(3L)
+
+    // null keys never match: the snapshot keeps its null-key rows, the
+    // batch adds its newest null-key row, a null-key delete removes none
+    val n = new ParquetKeyedTable(tmp("graft-upsert-null"), Seq("id"))
+    def nbatch(rows: (Option[Long], String, Long, String)*) =
+      rows.toDF("id", "name", "ver", "__deleted")
+    def names(): Seq[String] =
+      n.read(spark).get.select("name").collect().map(_.getString(0)).sorted.toSeq
+    n.merge(nbatch((None, "n1", 1L, "false"), (Some(1L), "a", 1L, "false")),
+      0L, order, isDelete)
+    n.merge(nbatch((None, "n2", 2L, "false"), (None, "n3", 3L, "false"),
+      (Some(1L), "a2", 2L, "false")), 1L, order, isDelete)
+    names() shouldBe Seq("a2", "n1", "n3")
+    n.merge(nbatch((None, "n4", 4L, "true")), 2L, order, isDelete)
+    names() shouldBe Seq("a2", "n1", "n3")
+  }
+
+  test("merge keeps two snapshots on disk and re-runs an epoch that crashed before the swap") {
+    val ss = spark
+    import ss.implicits._
+    val order = Seq(col("ver").desc)
+    val isDelete = col("__deleted") === "true"
+    def epoch(e: Long) = (e match {
+      case 5L => Seq((5L, "n5", 5L, "false"), (1L, "gone", 5L, "true"))
+      case _  => Seq((e, s"n$e", e, "false"), (0L, s"z$e", e, "false"))
+    }).toDF("id", "name", "ver", "__deleted")
+    val dir = tmp("graft-upsert-gc")
+    def versions(): Seq[String] = new java.io.File(dir).listFiles().toSeq
+      .map(_.getName).filter(_.matches("v\\d+")).sorted
+
+    val t = new ParquetKeyedTable(dir, Seq("id"))
+    (0L until 5L).foreach(e => t.merge(epoch(e), e, order, isDelete))
+    versions() shouldBe Seq("v3", "v4")
+    val before = snapshot(t)
+
+    // a directory squatting on the temp pointer path makes the swap throw
+    // after epoch 5's data is written: the table still reads epoch 4
+    val blocker = java.nio.file.Paths.get(dir, "_CURRENT.tmp5")
+    Files.createDirectories(blocker.resolve("x"))
+    an[java.io.IOException] should be thrownBy t.merge(epoch(5L), 5L, order, isDelete)
+    versions() shouldBe Seq("v3", "v4", "v5")
+    t.lastEpoch shouldBe Some(4L)
+    snapshot(t) shouldBe before
+
+    // the restarted sink re-runs epoch 5 to the table a clean run builds
+    Compaction.deleteTree(blocker)
+    val restarted = new ParquetKeyedTable(dir, Seq("id"))
+    restarted.merge(epoch(5L), 5L, order, isDelete)
+    val clean = new ParquetKeyedTable(tmp("graft-upsert-clean"), Seq("id"))
+    (0L to 5L).foreach(e => clean.merge(epoch(e), e, order, isDelete))
+    snapshot(restarted) shouldBe snapshot(clean)
+    snapshot(restarted).keySet shouldBe Set(0L, 2L, 3L, 4L, 5L)
+    versions() shouldBe Seq("v4", "v5")
   }
 
   test("Dlq.route quarantines bad rows with metadata and passes the rest") {
@@ -218,15 +298,6 @@ class UpsertSinkSpec extends SparkTestBase with Matchers {
     import ss.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val rowSchema = StructType(Seq(
-      StructField("id", LongType), StructField("name", StringType)))
-    def env(id: Long, name: String, op: String, tsMs: Long): String = {
-      val row = s"""{"id": $id, "name": "$name"}"""
-      val (before, after) =
-        if (op == "d") (row, "null") else ("null", row)
-      s"""{"before": $before, "after": $after, "source": {"ts_ms": $tsMs, "lsn": $tsMs}, "op": "$op", "ts_ms": $tsMs}"""
-    }
-
     val tableDir = tmp("graft-e2e-table")
     val dlqDir = tmp("graft-e2e-dlq")
     val table = new ParquetKeyedTable(tableDir, Seq("id"))
@@ -259,5 +330,47 @@ class UpsertSinkSpec extends SparkTestBase with Matchers {
     val dlq = spark.read.parquet(dlqDir)
     dlq.count() shouldBe 1
     dlq.select("json").head().getString(0) shouldBe "THIS IS NOT JSON"
+  }
+
+  test("foreachBatchMerge reads each micro-batch once: numInputRows and MetricsFeed count every row once") {
+    val ss = spark
+    import ss.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def ev(id: Long, op: String, tsMs: Long) = env(id, s"n$tsMs", op, tsMs)
+    val batches = Seq(
+      Seq(ev(1, "c", 1), ev(2, "c", 2), ev(3, "c", 3)),
+      Seq(ev(1, "u", 4), ev(2, "d", 5), ev(4, "c", 6), ev(4, "u", 7)),
+      Seq(ev(2, "c", 8), ev(3, "u", 9)),
+      Seq(ev(5, "c", 10)))
+
+    val table = new ParquetKeyedTable(tmp("graft-count-table"), Seq("id"))
+    val feed = new graft.obs.MetricsFeed
+    spark.streams.addListener(feed)
+    val input = MemoryStream[String]
+    val query = Debezium.unwrap(input.toDF().withColumnRenamed("value", "json"),
+        "json", rowSchema)
+      .writeStream.queryName("graft_upsert_count")
+      .option("checkpointLocation", tmp("graft-count-ckpt"))
+      .foreachBatch(table.foreachBatchMerge(Seq(col("__ts_ms").desc),
+        col("__deleted") === "true"))
+      .start()
+    def fed(name: String): Double = feed.toDF(spark)
+      .filter(col("name") === name && col("query") === "graft_upsert_count")
+      .agg(sum("value"), count("*")).head() match {
+        case r if r.getLong(1) >= batches.length => r.getDouble(0)
+        case _ => Double.NaN
+      }
+    try {
+      batches.foreach { b => input.addData(b); query.processAllAvailable() }
+      // listener events arrive asynchronously: wait for every batch's sample
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (fed("num_input_rows").isNaN && System.nanoTime() < deadline) Thread.sleep(100)
+      query.recentProgress.map(_.numInputRows).sum shouldBe batches.map(_.length).sum
+      fed("num_input_rows") shouldBe batches.map(_.length).sum.toDouble
+    } finally {
+      query.stop()
+      spark.streams.removeListener(feed)
+    }
+    snapshot2(table) shouldBe Map(1L -> "n4", 2L -> "n8", 3L -> "n9", 4L -> "n7", 5L -> "n10")
   }
 }
