@@ -1,7 +1,6 @@
 package graft
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.codec.ConnectJson
@@ -73,7 +72,7 @@ object Bench {
     // probe-gate smoke); children are recognized by the env marker, so
     // a subset arg never collapses the forked protocol to single-JVM
     if (forks > 1 && !isChild) parentMain(forks, args.headOption)
-    else childMain(args)
+    else childMain(args.headOption, isChild)
   }
 
   // ---------------------------------------------------------------- parent
@@ -99,18 +98,7 @@ object Bench {
     * bench_compare.py to divide out; the gate targets per-chunk
     * transients, which are exactly the failures rel-space cannot fix. */
   private def parentMain(forks: Int, onlyArg: Option[String] = None): Unit = {
-    val names = {
-      val all = SparkEntry.queries.keys.toSeq.sorted
-      onlyArg match {
-        case None => all
-        case Some(csv) =>
-          val only = csv.split(",").toSet
-          val unknown = only.diff(all.toSet)
-          require(unknown.isEmpty,
-            s"unknown query name(s): ${unknown.toSeq.sorted.mkString(",")}")
-          all.filter(only)
-      }
-    }
+    val names = SparkEntry.select(onlyArg).map(_._1)
     val chunks = balancedChunks(names, forks)
     val javaBin = new java.io.File(new java.io.File(
       sys.props("java.home"), "bin"), "java").getPath
@@ -129,9 +117,7 @@ object Bench {
     def runChunk(chunk: Seq[String], i: Int): String = {
       val out = Files.createTempFile(s"graft-bench-chunk$i-", ".json")
       val cmd: Seq[String] = Seq(javaBin) ++ addOpens ++ Seq(
-        s"-Xmx$xmx", "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC",
-        "-cp", cp, "graft.Bench", chunk.mkString(","))
+        s"-Xmx$xmx", "-cp", cp, "graft.Bench", chunk.mkString(","))
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_BENCH_CHILD", "1")
       pb.environment().put("SPARK_GRAFT_BENCH_OUT", out.toString)
@@ -264,47 +250,12 @@ object Bench {
 
   // ---------------------------------------------------------------- child
 
-  private def childMain(args: Array[String]): Unit = {
+  /** `onlyArg`: comma-separated query names to bench (dev loop and the
+    * parent's chunk assignment). */
+  private def childMain(onlyArg: Option[String], isChild: Boolean): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Optional arg: comma-separated query names to bench (dev loop and
-    // the parent's chunk assignment).
-    val queries = {
-      val all = SparkEntry.queries.toSeq.sortBy(_._1)
-      if (args.isEmpty) all
-      else {
-        val only = args(0).split(",").toSet
-        val known = all.map(_._1).toSet
-        val unknown = only.diff(known)
-        require(unknown.isEmpty,
-          s"unknown query name(s): ${unknown.toSeq.sorted.mkString(",")} — " +
-            "a typo here would silently bench a partial set")
-        all.filter { case (n, _) => only(n) }
-      }
-    }
-
-    // Drop state a query leaves behind: the dedup/CC family localCheckpoints
-    // shingle/edge RDDs that linger in the block manager until GC. Inside a
-    // multi-query JVM those blocks accumulate and taxed later queries 4-5×
-    // (BENCH_r06 q55/q56 recorded ~8 s vs ~2 s isolated). Scrubbing between
-    // queries (never inside a timed window) makes each measurement
-    // approximate an isolated run. (What scrubbing CANNOT undo — codegen
-    // class accumulation, JIT code-cache aging — is why the parent forks.)
-    def scrub(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      System.gc()
-    }
+    val queries = SparkEntry.select(onlyArg)
+    val spark = SparkEntry.session("graft-bench")
 
     var failed = List.empty[String]
 
@@ -329,7 +280,7 @@ object Bench {
         rows / ((System.nanoTime() - t0) / 1e9)
       }
       once() // untimed warm-up: codegen + shuffle-free plan compile
-      Seq.fill(3) { scrub(); once() }.max
+      Seq.fill(3) { SparkEntry.scrub(spark); once() }.max
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] ingest throughput FAILED: ${e.getMessage}")
@@ -355,7 +306,7 @@ object Bench {
     }
     val probeSec = try {
       probeOnce() // untimed: codegen + noop-sink classloading
-      val runs = Seq.fill(3) { scrub(); probeOnce() }.sorted
+      val runs = Seq.fill(3) { SparkEntry.scrub(spark); probeOnce() }.sorted
       runs(1)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] calibration probe FAILED: ${e.getMessage}")
@@ -366,7 +317,7 @@ object Bench {
     queries.foreach { case (_, fn) =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
-      scrub()
+      SparkEntry.scrub(spark)
     }
 
     // -------- timed passes: MEDIAN of 3 per query (single runs on a
@@ -391,7 +342,8 @@ object Bench {
         }
       }
       val runs = Seq(once(), once(), once()).flatten.sorted
-      scrub() // this query's checkpoints must not tax the next query
+      // this query's checkpoints must not tax the next query
+      SparkEntry.scrub(spark)
       if (runs.isEmpty) { failed ::= name; None }
       else {
         if (runs.length < 3) failed ::= name
@@ -403,7 +355,7 @@ object Bench {
 
     // standalone (non-forked) runs: an ingest that was supposed to run
     // but failed must surface as the -1 sentinel, not a real-looking 0
-    val tpOut = if (runIngest && throughput <= 0.0 && !isChildRun) {
+    val tpOut = if (runIngest && throughput <= 0.0 && !isChild) {
       failed = (failed :+ "ingest_throughput").distinct
       -1.0
     } else throughput
@@ -412,8 +364,6 @@ object Bench {
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }
-
-  private def isChildRun: Boolean = sys.env.contains("SPARK_GRAFT_BENCH_CHILD")
 
   // ---------------------------------------------------------------- report
 

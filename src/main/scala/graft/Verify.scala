@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,17 +6,9 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (sweep /
-    // debug reruns of a single query without paying for all 68)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // debug reruns of a single query without paying for all of them)
+    val queries = SparkEntry.select(args.lift(2))
+    val spark = SparkEntry.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // A reused outDir may hold a previous run's parquet for this query;
     // delete it BEFORE attempting the write so a newly-broken query shows
@@ -32,9 +23,7 @@ object Verify {
     // parquet dir would be (so downstream tooling sees "err", not a
     // silently absent row), and exit non-zero at the end.
     val failed = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       rmrf(new java.io.File(s"$outDir/$name"))
       val t0 = System.nanoTime()
       try {
