@@ -6,10 +6,24 @@ import org.apache.spark.sql.SparkSession
  * SparkSession factory with the engine's standard configuration:
  * UTC session time zone (determinism across engines), AQE enabled
  * (runtime join-strategy switch / skew splitting / partition coalescing
- * — our stand-in for hand-tuned plans at 100 TB), and shuffle
- * partitions sized to the local core count rather than the 200 default.
+ * — our stand-in for hand-tuned plans at 100 TB), shuffle
+ * partitions sized to the local core count rather than the 200 default,
+ * and file listing on the driver.
+ *
+ * Driver listing: above `parallelPartitionDiscovery.threshold` paths
+ * (default 32) Spark lists files in a Spark job, one task per path. Under
+ * `local[N]` those tasks run in this JVM anyway, so the job buys no
+ * parallelism and costs scheduling plus one Hadoop-conf deserialization
+ * per path. Resolving a JSON read of N local files on `local[4]`
+ * (4 vCPUs), threshold 32 vs `Int.MaxValue`, median of 5: N=40 428 vs
+ * 38 ms, N=400 1,670 vs 66 ms, N=4,000 12,561 vs 363 ms. A streaming file
+ * source of 40 files per micro-batch thus runs one Spark job per batch,
+ * not two. Cluster sessions are not built here and keep Spark's parallel
+ * listing, which pays off on an object store.
  */
 object GraftSession {
+  private val ListingThreshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
@@ -20,6 +34,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config(ListingThreshold, Int.MaxValue.toString)
       .getOrCreate()
     // getOrCreate ignores builder configs when a session already exists;
     // re-assert the runtime-settable ones so the standard configuration
@@ -28,6 +43,7 @@ object GraftSession {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.shuffle.partitions", cores.toString)
+    spark.conf.set(ListingThreshold, Int.MaxValue.toString)
     // extensions are builder-time only — post-hoc registration covers the
     // session-reuse path (same function, same registry entry)
     graft.functions.GraftExtensions.register(spark)

@@ -20,7 +20,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
  *
  * Samples mirror the panels the reference actually displays:
  * input/processed rows per second (Source Record Poll/Write rate),
- * batch duration, and per-query state-store rows.
+ * batch duration, and per-query state-store rows. Batch duration is
+ * also split into the micro-batch's phases (source offsets,
+ * write-ahead log, source batch, planning, sink, offset commit), so a cost
+ * such as a per-batch file-listing job shows in the phase it sits in.
  */
 final class MetricsFeed extends StreamingQueryListener {
 
@@ -43,6 +46,9 @@ final class MetricsFeed extends StreamingQueryListener {
     put("num_input_rows", p.numInputRows.toDouble)
     Option(p.durationMs.get("triggerExecution"))
       .foreach(d => put("trigger_execution_ms", d.toDouble))
+    MetricsFeed.phases.foreach { case (phase, name) =>
+      Option(p.durationMs.get(phase)).foreach(d => put(name, d.toDouble))
+    }
     p.stateOperators.zipWithIndex.foreach { case (s, i) =>
       put(s"state_rows_total_op$i", s.numRowsTotal.toDouble)
     }
@@ -67,4 +73,16 @@ final class MetricsFeed extends StreamingQueryListener {
   }
 
   def clear(): Unit = samples.clear()
+}
+
+object MetricsFeed {
+  /** `progress.durationMs` phase → sample name, in the order a micro-batch
+    * runs them; a phase a batch skips has no key and gets no sample. */
+  val phases: Seq[(String, String)] = Seq(
+    "latestOffset" -> "latest_offset_ms",
+    "walCommit" -> "wal_commit_ms",
+    "getBatch" -> "get_batch_ms",
+    "queryPlanning" -> "query_planning_ms",
+    "addBatch" -> "add_batch_ms",
+    "commitOffsets" -> "commit_offsets_ms")
 }

@@ -27,6 +27,13 @@ trait Source {
  * for determinism — no inference drift between restarts).
  * `maxFilesPerTrigger` is the reference's `batch.max.rows` analogue
  * (ST5 backpressure).
+ *
+ * File listing: each micro-batch resolves its files by path. A session
+ * from `GraftSession.local` lists them on the driver. A cluster session
+ * keeps Spark's parallel listing (right on an object store), so a batch
+ * of more files than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+ * (default 32) pays one listing job before it reads; size
+ * `maxFilesPerTrigger` against that threshold.
  */
 final case class FileSource(format: String, path: String, schema: StructType,
                             options: Map[String, String] = Map.empty) extends Source {

@@ -49,10 +49,10 @@ class MetricsFeedSpec extends SparkTestBase with Matchers {
       input.addData(101L to 250L)
       query.processAllAvailable()
       // listener events are delivered asynchronously; wait for both
-      // batches' num_input_rows samples to land
+      // batches' commit_offsets_ms, the last sample a data batch puts
       val deadline = System.nanoTime() + 30e9.toLong
       def landed(): Boolean = feed.toDF(spark)
-        .filter(col("name") === "num_input_rows")
+        .filter(col("name") === "commit_offsets_ms")
         .filter(col("query") === "metrics_probe")
         .count() >= 2
       while (!landed() && System.nanoTime() < deadline) Thread.sleep(100)
@@ -70,6 +70,21 @@ class MetricsFeedSpec extends SparkTestBase with Matchers {
     total shouldBe 250.0
     // every sample row is (name, query, batch_id, value)-shaped
     metrics.columns shouldBe Array("name", "query", "batch_id", "value")
+    // each batch that read data is split into all six phases, each
+    // within the batch's trigger time
+    val dataBatches = metrics.filter(col("query") === "metrics_probe").collect()
+      .groupBy(_.getLong(2)).values
+      .map(_.map(r => r.getString(0) -> r.getDouble(3)).toMap)
+      .filter(_.getOrElse("num_input_rows", 0.0) > 0)
+    dataBatches should have size 2
+    dataBatches.foreach { m =>
+      MetricsFeed.phases.foreach { case (_, name) =>
+        withClue(s"$name: ") {
+          m.keySet should contain (name)
+          m(name) should (be >= 0.0 and be <= m("trigger_execution_ms"))
+        }
+      }
+    }
   }
 
   test("/metrics exposition roundtrips through the engine's own scrape parser") {

@@ -2,18 +2,30 @@
 
     python3 -m unittest discover -s tools -p 'test_*.py'
 """
+import contextlib
 import io
 import json
 import os
 import sys
+import tempfile
 import unittest
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, TOOLS)
 
 import ab_pairs  # noqa: E402
 
 RATE = {"name": "rate_per_s", "unit": "1/s", "better": "higher", "bound": 0.25}
 CPU = {"name": "cpu_s", "unit": "s", "better": "lower", "bound": 0.25}
+
+
+def traced_line(side, seed, get_batch_ms, jobs, tasks):
+    return {"workload": "users_to_topic", "pair": seed, "seed": seed, "side": side,
+            "trace": 1,
+            "result": {"correct": True, "attempted": 100, "failed": 0, "metrics": {
+                "sources.get_batch_ms": {"value": get_batch_ms, "unit": "ms"},
+                "exec.jobs": {"value": jobs, "unit": "count"},
+                "exec.tasks": {"value": tasks, "unit": "count"}}}}
 
 
 def line(side, seed, rate, cpu, correct=True):
@@ -72,6 +84,41 @@ class VerdictTest(unittest.TestCase):
         ab_pairs.print_table(rows, failed, out)
         self.assertIn("10/10", out.getvalue())
         json.dumps(rows)
+
+
+class TracedSummaryTest(unittest.TestCase):
+    def test_traced_jsonl_lists_per_layer_metrics_with_quartiles_and_no_verdict(self):
+        lines = [traced_line("parent", s, 300 + s, 2.0, 42.0) for s in range(5)] + \
+                [traced_line("change", s, 14 + s, 1.0, 4.0 if s else 42.0) for s in range(5)] + \
+                [line("parent", s, 950, 30.0) for s in range(5)] + \
+                [line("change", s, 960, 18.0) for s in range(5)]
+        with tempfile.NamedTemporaryFile("w", suffix=".jsonl", delete=False) as f:
+            f.write("".join(json.dumps(r) + "\n" for r in lines))
+        self.addCleanup(os.remove, f.name)
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            ab_pairs.main(["--summarize", f.name, "--change", os.path.dirname(TOOLS)])
+        text = out.getvalue()
+        traced = text[text.index("workload users_to_topic (traced"):]
+        rows = {ln.split()[0]: ln for ln in traced.splitlines()[2:5]}
+        # BENCHMARK.json order; metrics the runs did not report are left out
+        self.assertEqual(list(rows), ["sources.get_batch_ms", "exec.jobs", "exec.tasks"])
+        self.assertIn("302.0", rows["sources.get_batch_ms"])
+        self.assertIn("16.0", rows["sources.get_batch_ms"])
+        self.assertTrue(rows["sources.get_batch_ms"].rstrip().endswith("5/5    -"))
+        self.assertIn(" 4/5 ", rows["exec.tasks"])  # the tie counts for neither side
+        # the untraced records of the same file keep their verdict table
+        self.assertIn("workload cdc_to_table\n", text)
+        self.assertIn("no regression", text[:text.index("(traced")])
+
+    def test_per_layer_rows_carry_no_verdict(self):
+        lines = [traced_line("parent", s, 300.0, 2.0, 42.0) for s in range(3)] + \
+                [traced_line("change", s, 14.0, 1.0, 4.0) for s in range(3)]
+        layer = [{"name": "exec.jobs", "unit": "count", "better": "lower"}]
+        rows, failed = ab_pairs.summarize(lines, layer)
+        self.assertEqual([(r["metric"], r["wins"], r["verdict"]) for r in rows],
+                         [("exec.jobs", 3, None)])
+        self.assertEqual(rows[0]["change"], (1.0, 1.0, 1.0))
 
 
 if __name__ == "__main__":
