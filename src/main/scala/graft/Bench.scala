@@ -342,7 +342,7 @@ object Bench {
         }
       }
       val runs = Seq(once(), once(), once()).flatten.sorted
-      // this query's checkpoints must not tax the next query
+      // this query's shares must not tax the next query
       SparkEntry.scrub(spark)
       if (runs.isEmpty) { failed ::= name; None }
       else {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.codec.Debezium
-import graft.core.{Pipeline, PipelineSpec, Tables}
+import graft.core.{Pipeline, PipelineSpec, Share, Tables}
 import graft.multimodal.Multimodal
 import graft.operators.{Affinity, Behavior, CorpusLM, Dedup, Eval, Graph, Layout, Profile, Relational, Sampling, Similarity, Sketch, TextMetrics, Web}
 import graft.sources.PromText
@@ -1825,9 +1825,9 @@ object Queries {
     val d = Tables.documents(s, dir)
     val surv = d.join(Dedup.exactSurvivors(d, "doc_id", "text"), "doc_id")
     // two consumers (leak filter + clustering): materialize once
-    val pairs = Dedup.nearDupPairs(surv, "doc_id", "text",
-        threshold = 0.8, shingleWidth = 3, bands = 16, rowsPerBand = 3)
-      .localCheckpoint(eager = false)
+    val pairs = Share.once(Dedup.nearDupPairs(surv, "doc_id", "text",
+        threshold = 0.8, shingleWidth = 3, bands = 16, rowsPerBand = 3),
+      "q95.pairs")
     val leaked = pairs
       .filter(col("d1") % 7 === 0 && col("d2") % 7 =!= 0)
       .select(col("d2").as("doc_id"))
@@ -1957,7 +1957,7 @@ object Queries {
     * tercile cuts, interpolated identically by both engines over
     * exact integers. */
   val q102: Q = (s, dir) => {
-    // (measured: localCheckpoint-ing this frame does NOT help — AQE's
+    // (measured: materializing this frame once does NOT help — AQE's
     // exchange reuse already deduplicates the scored subtree between
     // the quantile program and the bucket join)
     val scored = CorpusLM.bigramNll(Tables.documents(s, dir), "doc_id", "text",
@@ -2012,6 +2012,32 @@ object Queries {
       .orderBy("cid")
   }
 
+  /** BPE round 0: each corpus word with its count `n` and its symbol
+    * string `s` (characters space-joined and space-padded). Round 1 reads
+    * it TWICE (pair count + merge fold), so it is shared and the corpus
+    * tokenize+count runs once (r17, §2); later rounds read their
+    * predecessor's share. */
+  private def bpeInit(docs: DataFrame): DataFrame = Share.once(docs
+      .select(explode(toks(col("text"))).as("word"))
+      .groupBy("word").agg(count(lit(1)).as("n"))
+      .withColumn("s", concat(lit(" "),
+        array_join(filter(split(col("word"), ""), c => c =!= ""), " "),
+        lit(" "))), "bpe.init")
+
+  /** Frequency-weighted adjacent symbol pairs of a BPE round's words:
+    * (pair = "l r", cnt). */
+  private def bpePairCounts(cur: DataFrame): DataFrame = {
+    val sy = col("__sy")
+    val pairs = when(size(sy) >= 2,
+      transform(sequence(lit(1), size(sy) - 1),
+        i => concat(element_at(sy, i), lit(" "), element_at(sy, i + 1))))
+      .otherwise(array().cast("array<string>"))
+    cur.select(col("n"),
+        filter(split(trim(col("s")), " "), x => x =!= "").as("__sy"))
+      .select(col("n"), explode(pairs).as("pair"))
+      .groupBy("pair").agg(sum(col("n")).as("cnt"))
+  }
+
   /** Q105 BPE merge training (north star: the tokenizer itself): the
     * corpus' word-frequency table (vocabulary-bounded — the corpus is
     * scanned ONCE) trains 6 byte-pair-encoding merges. Each round
@@ -2028,38 +2054,18 @@ object Queries {
     * word frame (word, n, s)) after `rounds` rounds. `private[graft]`
     * so the streaming twin's spec can train its reference merges. */
   private[graft] def bpeTrain(docs: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
-    val words = docs
-      .select(explode(toks(col("text"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("n"))
-    val init = words.withColumn("s",
-      concat(lit(" "),
-        array_join(filter(split(col("word"), ""), c => c =!= ""), " "),
-        lit(" ")))
-      // round 1 consumes the vocabulary TWICE (the pair count and the
-      // merge fold) — lazy checkpoint so the corpus tokenize+count runs
-      // once (r17, §2); later rounds read their predecessor's checkpoint
-      .localCheckpoint(eager = false)
-    val (fin, bests) = (1 to rounds).foldLeft((init, List.empty[DataFrame])) {
+    val (fin, bests) = (1 to rounds).foldLeft((bpeInit(docs), List.empty[DataFrame])) {
       case ((cur, acc), k) =>
-        val sy = filter(split(trim(col("s")), " "), x => x =!= "")
-        val withSy = cur.select(col("n"), sy.as("__sy"))
-        val pairCol = when(size(col("__sy")) >= 2,
-          transform(sequence(lit(1), size(col("__sy")) - 1),
-            i => concat(element_at(col("__sy"), i), lit(" "),
-              element_at(col("__sy"), i + 1))))
-          .otherwise(array().cast("array<string>"))
-        val best = withSy.select(col("n"), explode(pairCol).as("pair"))
-          .groupBy("pair").agg(sum(col("n")).as("cnt"))
+        val best = bpePairCounts(cur)
           .orderBy(col("cnt").desc, col("pair")).limit(1)
           .select(lit(k.toLong).as("merge_round"), col("pair"), col("cnt"))
-        // localCheckpoint keeps the round lineage flat (the kmeans
-        // pattern); the frame is vocabulary-sized
-        val next = cur
+        // the share keeps each round's plan flat (the kmeans pattern);
+        // the frame is vocabulary-sized
+        val next = Share.once(cur
           .crossJoin(broadcast(best.select(col("pair").as("__bp"))))
           .withColumn("s",
             expr("replace(s, ' ' || __bp || ' ', ' ' || replace(__bp, ' ', '') || ' ')"))
-          .drop("__bp")
-          .localCheckpoint()
+          .drop("__bp"), "bpeTrain.next")
         (next, best :: acc)
     }
     (bests.reverse.reduce(_ unionByName _), fin)
@@ -2087,30 +2093,11 @@ object Queries {
   private[graft] def bpeTrainBatched(docs: DataFrame, rounds: Int,
                                      batchK: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    val words = docs
-      .select(explode(toks(col("text"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("n"))
-    val init = words.withColumn("s",
-      concat(lit(" "),
-        array_join(filter(split(col("word"), ""), c => c =!= ""), " "),
-        lit(" ")))
-      // round 1 consumes the vocabulary TWICE (the candidate pool and
-      // the merge fold) — lazy checkpoint so the corpus tokenize+count
-      // runs once (r17, §2); later rounds read their predecessor's
-      .localCheckpoint(eager = false)
-    val (fin, batches) = (1 to rounds).foldLeft((init, List.empty[DataFrame])) {
+    val (fin, batches) = (1 to rounds).foldLeft((bpeInit(docs), List.empty[DataFrame])) {
       case ((cur, acc), k) =>
-        val sy = filter(split(trim(col("s")), " "), x => x =!= "")
-        val withSy = cur.select(col("n"), sy.as("__sy"))
-        val pairCol = when(size(col("__sy")) >= 2,
-          transform(sequence(lit(1), size(col("__sy")) - 1),
-            i => concat(element_at(col("__sy"), i), lit(" "),
-              element_at(col("__sy"), i + 1))))
-          .otherwise(array().cast("array<string>"))
         // candidate pool: top-batchK pairs in the same total order the
         // single-merge trainer uses (count desc, pair asc)
-        val cand = withSy.select(col("n"), explode(pairCol).as("pair"))
-          .groupBy("pair").agg(sum(col("n")).as("cnt"))
+        val cand = bpePairCounts(cur)
           .orderBy(col("cnt").desc, col("pair")).limit(batchK)
           .withColumn("rank",
             row_number().over(Window.orderBy(col("cnt").desc, col("pair"))))
@@ -2119,14 +2106,14 @@ object Queries {
           .withColumn("__m", expr("replace(pair, ' ', '')"))
         val hi = cand.select(col("rank").as("__hrank"), col("__l").as("__hl"),
           col("__r").as("__hr"), col("__m").as("__hm"))
-        val selected = cand.join(broadcast(hi),
+        val selected = Share.once(cand.join(broadcast(hi),
             col("__hrank") < col("rank") && (
               col("__hr") === col("__l") || col("__hl") === col("__r") ||
               col("__hm") === col("__l") || col("__hm") === col("__r") ||
               col("__m") === col("__hl") || col("__m") === col("__hr") ||
               col("__m") === col("__hm")),
-            "left_anti")
-          .localCheckpoint() // two consumers: the merge table + the fold
+            "left_anti"),
+          "bpeTrainBatched.selected") // two consumers: merge table + fold
         // the whole batch ships as ONE rank-ordered array in a 1-row
         // broadcast; the fold applies each replace to the round-start
         // string — order irrelevant by construction, kept for replay
@@ -2134,12 +2121,11 @@ object Queries {
           .agg(array_sort(collect_list(struct(col("rank"), col("pair"))))
             .as("__s1"))
           .select(transform(col("__s1"), p => p.getField("pair")).as("__sel"))
-        val next = cur.crossJoin(broadcast(selRow))
+        val next = Share.once(cur.crossJoin(broadcast(selRow))
           .withColumn("s",
             expr("aggregate(__sel, s, (acc, x) -> " +
               "replace(acc, ' ' || x || ' ', ' ' || replace(x, ' ', '') || ' '))"))
-          .drop("__sel")
-          .localCheckpoint()
+          .drop("__sel"), "bpeTrainBatched.next")
         val batch = selected.select(lit(k.toLong).as("merge_round"),
           col("rank").cast("long").as("rank"), col("pair"), col("cnt"))
         (next, batch :: acc)
@@ -2427,14 +2413,18 @@ object Queries {
     * of quantized-share propagation with exact DECIMAL share sums —
     * the link-authority weighting a crawl pipeline applies to
     * domains. */
-  val q148: Q = (s, dir) => {
-    val bi = Tables.lineitem(s, dir)
+  /** The brand co-purchase fixture of q148/q150/q159/q162/q236, one row
+    * per distinct (order `b`, brand `i`). Its callers self-join it on `b`
+    * in one plan, so exchange reuse runs the distinct once. */
+  private def brandsByOrder(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
       .join(broadcast(Tables.part(s, dir)),
         col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("b"), col("p_brand").as("i"))
       .distinct()
-      // both self-join sides read bi (r16): materialize it once
-      .localCheckpoint(eager = false)
+
+  val q148: Q = (s, dir) => {
+    val bi = brandsByOrder(s, dir)
     val pairs = bi.join(bi.select(col("b"), col("i").as("j")), "b")
       .where(col("i") < col("j"))
       .select(col("i").as("x"), col("j").as("y"))
@@ -2461,13 +2451,7 @@ object Queries {
     * corners — the cohesion statistic behind community/spam-farm
     * analysis. */
   val q150: Q = (s, dir) => {
-    val bi = Tables.lineitem(s, dir)
-      .join(broadcast(Tables.part(s, dir)),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey").as("b"), col("p_brand").as("i"))
-      .distinct()
-      // both self-join sides read bi (r16): materialize it once
-      .localCheckpoint(eager = false)
+    val bi = brandsByOrder(s, dir)
     val pairs = bi.join(bi.select(col("b"), col("i").as("j")), "b")
       .where(col("i") < col("j"))
       .select(col("i").as("x"), col("j").as("y"))
@@ -2496,13 +2480,12 @@ object Queries {
     * all-pairs, no nested loop. */
   val q152: Q = (s, dir) => {
     val ms = unix_millis(col("ts").cast("timestamp"))
+    // read by BOTH overlap-join sides and the per-user session count,
+    // all in one plan: exchange reuse runs the sessionize pass once
     val sess = Behavior.sessionize(Tables.events(s, dir), "user_id", "ts",
         gapSeconds = 1800L)
       .groupBy(col("user_id"), col("session_idx"))
       .agg((min(ms) - 900000L).as("s_ms"), (max(ms) + 900000L).as("e_ms"))
-      // consumed by BOTH overlap-join sides and the per-user session
-      // count: materialize the sessionize window pass once (r16)
-      .localCheckpoint(eager = false)
     val l = sess.select(col("user_id").as("u1"), col("session_idx").as("x1"),
       col("s_ms").as("s1"), col("e_ms").as("e1"))
     val r = sess.select(col("user_id").as("u2"), col("s_ms").as("s2"),
@@ -3073,13 +3056,7 @@ object Queries {
     * hops — the blast-radius / small-world profile as exact BFS
     * frontier joins. */
   val q236: Q = (s, dir) => {
-    val bi = Tables.lineitem(s, dir)
-      .join(broadcast(Tables.part(s, dir)),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey").as("b"), col("p_brand").as("i"))
-      .distinct()
-      // both self-join sides read bi (r16): materialize it once
-      .localCheckpoint(eager = false)
+    val bi = brandsByOrder(s, dir)
     val pairs = bi.join(bi.select(col("b"), col("i").as("j")), "b")
       .where(col("i") < col("j"))
       .select(col("i").as("x"), col("j").as("y"))
@@ -4120,6 +4097,9 @@ object Queries {
           !array_contains(col("__stops"), p.getField("b"))))
       .otherwise(array().cast("array<struct<a:string,b:string>>"))
     val minSupport = math.max(2L, d.count() * 5000L / 1000000L)
+    // both union branches (src→dst and the swap) read this table in
+    // pageRank's one edge plan: exchange reuse runs the corpus
+    // tokenize+explode+count once
     val pairs = d.crossJoin(broadcast(stopArr))
       .select(explode(biArr).as("p"))
       .select(least(col("p.a"), col("p.b")).as("x"),
@@ -4127,11 +4107,6 @@ object Queries {
       .where(col("x") < col("y"))
       .groupBy("x", "y").agg(count(lit(1)).as("w"))
       .where(col("w") >= minSupport)
-      // both union branches (src→dst and the swap) consume this table:
-      // without the checkpoint the corpus tokenize+explode+count runs
-      // TWICE inside pageRank's edge materialization (r17, §2 shared
-      // subtree); lazy — it fills on the first pass that needs it
-      .localCheckpoint(eager = false)
     val edges = pairs.select(col("x").as("src"), col("y").as("dst"), col("w"))
       .unionByName(pairs.select(col("y").as("src"), col("x").as("dst"),
         col("w")))
@@ -4830,13 +4805,7 @@ object Queries {
     * source's exact BIGINT out-weight — a 1000-order tie carries more
     * authority than a 2-order one. */
   val q159: Q = (s, dir) => {
-    val bi = Tables.lineitem(s, dir)
-      .join(broadcast(Tables.part(s, dir)),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey").as("b"), col("p_brand").as("i"))
-      .distinct()
-      // both self-join sides read bi (r16): materialize it once
-      .localCheckpoint(eager = false)
+    val bi = brandsByOrder(s, dir)
     val pairs = bi.join(bi.select(col("b"), col("i").as("j")), "b")
       .where(col("i") < col("j"))
       .groupBy(col("i").as("x"), col("j").as("y"))
@@ -4882,20 +4851,13 @@ object Queries {
     * largest component, global triangle count, mean degree — the
     * one-row health readout before any per-node graph analytics. */
   val q162: Q = (s, dir) => {
-    val bi = Tables.lineitem(s, dir)
-      .join(broadcast(Tables.part(s, dir)),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey").as("b"), col("p_brand").as("i"))
-      .distinct()
-      // both self-join sides read bi (r16): materialize it once
-      .localCheckpoint(eager = false)
-    val pairs = bi.join(bi.select(col("b"), col("i").as("j")), "b")
+    val bi = brandsByOrder(s, dir)
+    // consumed by THREE branches (triangles, edge count, components):
+    // without this the pair build ran three times (r16)
+    val pairs = Share.once(bi.join(bi.select(col("b"), col("i").as("j")), "b")
       .where(col("i") < col("j"))
       .select(col("i").as("x"), col("j").as("y"))
-      .distinct()
-      // consumed by THREE branches (triangles, edge count, components):
-      // without this the pair build ran three times (r16)
-      .localCheckpoint(eager = false)
+      .distinct(), "q162.pairs")
     val tri = Graph.triangles(pairs, "x", "y")
     val nodeStats = tri.agg(count(lit(1)).as("n_nodes"),
       sum(col("degree")).as("__sumdeg"),

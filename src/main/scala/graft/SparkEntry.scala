@@ -37,12 +37,13 @@ object SparkEntry {
     }
   }
 
-  /** Drop state a query leaves behind: the dedup/CC family localCheckpoints
-    * shingle/edge RDDs that linger in the block manager until GC. Inside a
-    * multi-query JVM those blocks accumulate and taxed later queries 4-5×
-    * (BENCH_r06 q55/q56 recorded ~8 s vs ~2 s isolated). Scrubbing between
-    * queries (never inside a timed window) makes each measurement
-    * approximate an isolated run. (What scrubbing CANNOT undo — codegen
+  /** Drop state a query leaves behind: the rows its `Share.once` calls
+    * persisted (shingle, edge and round tables) stay in the block manager
+    * until their DataFrames are garbage-collected. Inside a multi-query
+    * JVM those blocks accumulate and taxed later queries 4-5× (BENCH_r06
+    * q55/q56 recorded ~8 s vs ~2 s isolated). Scrubbing between queries
+    * (never inside a timed window) unpersists them, so each measurement
+    * approximates an isolated run. (What scrubbing CANNOT undo — codegen
     * class accumulation, JIT code-cache aging — is why `Bench` forks.) */
   def scrub(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values

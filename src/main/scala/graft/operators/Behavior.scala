@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Share
+
 /**
  * Event-sequence analytics over the `events` stream: ordered funnel
  * conversion and cohort retention — the two reports every
@@ -681,7 +683,7 @@ object Behavior {
   def theilSenAnomalies(df: DataFrame, by: Seq[String], xCol: String,
                         yCol: String, k: Double = 3.0): DataFrame = {
     // Slopes feed the residual projection AND the final report join —
-    // the checkpoint stops the day²-bounded pair program re-running
+    // the share stops the day²-bounded pair program re-running
     // per consumer. The two medians share ONE residual histogram
     // (r17): the deviation |r − intercept| is a per-VALUE transform,
     // so the MAD histogram derives from the residual histogram by a
@@ -689,17 +691,19 @@ object Behavior {
     // program over per-row deviations (whose input embedded the whole
     // first program — the q186 13.7 s / 32-core plan-blowup case; the
     // med/dev checkpoints that papered over it are gone with it).
-    val slopes = theilSen(df, by, xCol, yCol).localCheckpoint()
+    val slopes = Share.once(theilSen(df, by, xCol, yCol),
+      "theilSenAnomalies.slopes")
     val resid = df.join(slopes, by)
       .select((by.map(col) :+ col(xCol) :+
         round(col(yCol).cast("double") -
           col("ts_slope") * col(xCol).cast("double"), 6).as("__r")): _*)
     val rCounts = resid.groupBy((by.map(col) :+ col("__r")): _*)
       .agg(count(lit(1)).as("__cnt"))
+    // med and mad are read only by the final plan below, where exchange
+    // reuse runs each quantile program's shuffles once
     val med = Relational.exactQuantilesFromCounts(rCounts, by, "__r",
         "__cnt", Seq("intercept" -> 0.5))
       .withColumn("intercept", round(col("intercept"), 6))
-      .localCheckpoint()
     val dCounts = rCounts.join(med, by)
       .select((by.map(col) :+
         round(abs(col("__r") - col("intercept")), 6).as("__d") :+
@@ -709,7 +713,6 @@ object Behavior {
     val mad = Relational.exactQuantilesFromCounts(dCounts, by, "__d",
         "__cnt", Seq("mad" -> 0.5))
       .withColumn("mad", round(col("mad"), 6))
-      .localCheckpoint()
     resid.join(med, by)
       .withColumn("__d", round(abs(col("__r") - col("intercept")), 6))
       .join(mad, by)

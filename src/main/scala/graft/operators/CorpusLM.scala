@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Share
+
 /**
  * Corpus-distribution operators for pretraining-data curation: the
  * statistical quality gates that sit between the rule-based filters
@@ -516,7 +518,8 @@ object CorpusLM {
    * Scale shape: ONE corpus scan builds the word table; every round
    * after is vocabulary-bounded (words × pieces never touches the
    * corpus), with the score map folded in as a 1-row broadcast — the
-   * kmeans/q75 round discipline, localCheckpointed per round.
+   * kmeans/q75 round discipline, each round's vocabulary a
+   * `Share.once`.
    */
   def unigramTrain(docs: DataFrame, textCol: String, rounds: Int,
                    seedTopK: Int, maxPieceLen: Int = 4): DataFrame = {
@@ -525,10 +528,9 @@ object CorpusLM {
       "unigramTrain: need seedTopK >= 1 and maxPieceLen >= 2")
     def lnMicro(x: Column): Column =
       floor(log(x) * 1e6d + 0.5d).cast("long")
-    val words = docs
+    val words = Share.once(docs
       .select(explode(toks(col(textCol))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .groupBy("word").agg(count(lit(1)).as("n")), "unigramTrain.words")
     val subs = words
       .select(col("n"), explode(flatten(transform(
         sequence(lit(1), lit(maxPieceLen)), l => transform(
@@ -537,8 +539,8 @@ object CorpusLM {
             .otherwise(array().cast("array<int>")),
           p => col("word").substr(p, l))))).as("piece"))
       .groupBy("piece").agg(sum(col("n")).as("cnt"))
-    val singles = subs.where(length(col("piece")) === 1)
-      .select(col("piece")).localCheckpoint()
+    val singles = Share.once(subs.where(length(col("piece")) === 1)
+      .select(col("piece")), "unigramTrain.singles")
     val seed = subs.where(length(col("piece")) === 1)
       .unionByName(subs.where(length(col("piece")) > 1)
         .orderBy(col("cnt").desc, col("piece")).limit(seedTopK))
@@ -547,7 +549,6 @@ object CorpusLM {
       .select(col("piece"), col("cnt"),
         lnMicro(col("cnt").cast("double") / col("__tot").cast("double"))
           .as("score_micro"))
-      .localCheckpoint()
     (1 to rounds).foldLeft(vocab0) { case (vocab, _) =>
       val m = vocab.agg(map_from_entries(
         collect_list(struct(col("piece"), col("score_micro")))).as("__sm"))
@@ -561,11 +562,11 @@ object CorpusLM {
         .groupBy("piece").agg(sum(col("cnt")).as("cnt"))
       val tv = kept.agg(sum(col("cnt")).as("__tot"),
         count(lit(1)).as("__v"))
-      kept.crossJoin(broadcast(tv))
+      Share.once(kept.crossJoin(broadcast(tv))
         .select(col("piece"), col("cnt"),
           lnMicro((col("cnt") + 1L).cast("double") /
-            (col("__tot") + col("__v")).cast("double")).as("score_micro"))
-        .localCheckpoint()
+            (col("__tot") + col("__v")).cast("double")).as("score_micro")),
+        "unigramTrain.vocab")
     }
   }
 

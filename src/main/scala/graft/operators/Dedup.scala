@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Share
+
 /**
  * Document deduplication operators (SURVEY.md §7 step 7, the LLM-pipeline
  * north star): exact dedup on a hashed key and MinHash/LSH near-duplicate
@@ -157,16 +159,16 @@ object Dedup {
     // split materializes before the chunk lambda reads it (the
     // wordShinglesOf perf contract).
     val nChunks = ceil(size(col("__ws")).cast("double") / cw).cast("long")
-    val hashes = docs
+    // both the keeper aggregate and the verdict join read the chunk
+    // stream: materialize the 28 B/occurrence rows once instead of
+    // re-running the tokenize + hash explode per consumer (r16)
+    val hashes = Share.once(docs
       .select(col(idCol), split(normText(col(textCol)), " ").as("__ws"))
       .select(
         col(idCol),
         posexplode(transform(sequence(lit(0L), nChunks - 1),
-          i => chunkHashStruct(col("__ws"), i, cw))).as(Seq("__idx", "__h")))
-      // both the keeper aggregate and the verdict join read the chunk
-      // stream: materialize the 28 B/occurrence rows once instead of
-      // re-running the tokenize + hash explode per consumer (r16)
-      .localCheckpoint(eager = false)
+          i => chunkHashStruct(col("__ws"), i, cw))).as(Seq("__idx", "__h"))),
+      "chunkDedup.hashes")
     val keepers = hashes
       .groupBy(col("__h.h1"), col("__h.h2"))
       .agg(min(col(idCol)).as("__keeper"))
@@ -299,17 +301,17 @@ object Dedup {
     val words = split(normText(col(textCol)), " ")
     val starts = when(size(words) >= sw, sequence(lit(0), size(words) - sw))
       .otherwise(array().cast("array<int>"))
-    val occ = docs
+    // the dup-keeper aggregate and the occurrence join both read the
+    // span stream: materialize the 28 B/occurrence rows once instead
+    // of re-running the stride-1 explode + span hashing twice (r16)
+    val occ = Share.once(docs
       .select(col(idCol).as("__id"), words.as("__ws"),
         explode(starts).as("__start"))
       .select(col("__id"), col("__start"),
         xxhash64(spanAt(col("__ws"), col("__start"), sw)).as("__h1"),
         xxhash64(lit(0x9e3779b9L),
-          spanAt(col("__ws"), col("__start"), sw)).as("__h2"))
-      // the dup-keeper aggregate and the occurrence join both read the
-      // span stream: materialize the 28 B/occurrence rows once instead
-      // of re-running the stride-1 explode + span hashing twice (r16)
-      .localCheckpoint(eager = false)
+          spanAt(col("__ws"), col("__start"), sw)).as("__h2")),
+      "substringDedup.occ")
     // Only spans seen more than once matter downstream: filtering the
     // aggregate here keeps the occurrence join's build side at the
     // duplicated fraction of the corpus, not all of it.
@@ -572,10 +574,11 @@ object Dedup {
                             planes: Array[Array[Int]], codeRadius: Int,
                             threshold: Double): DataFrame = {
     // both self-join sides reference this subtree: materialize it once
-    // (lazy localCheckpoint) instead of running the scan + sign-coding
-    // twice (r16 — the coding pass is the family's per-row hot loop)
-    val buckets = signCodeBuckets(emb, idCol, vecCol, planes, codeRadius)
-      .localCheckpoint(eager = false)
+    // instead of running the scan + sign-coding twice (r16 — the
+    // coding pass is the family's per-row hot loop)
+    val buckets = Share.once(
+      signCodeBuckets(emb, idCol, vecCol, planes, codeRadius),
+      "embeddingNearDupPairs.buckets")
     val pairs = buckets.alias("a")
       .join(buckets.alias("b"),
         col("a.__ck") === col("b.__ck") && col("a.__id") < col("b.__id"))
@@ -600,10 +603,11 @@ object Dedup {
                                  planes: Array[Array[Int]], codeRadius: Int,
                                  threshold: Double,
                                  isLeftId: Column => Column): DataFrame = {
-    // codes computed ONCE (lazy localCheckpoint): both split filters
+    // codes computed ONCE: both split filters
     // read the materialized rows instead of re-coding the corpus (r16)
-    val buckets = signCodeBuckets(emb, idCol, vecCol, planes, codeRadius)
-      .localCheckpoint(eager = false)
+    val buckets = Share.once(
+      signCodeBuckets(emb, idCol, vecCol, planes, codeRadius),
+      "crossEmbeddingNearDupPairs.buckets")
     val pairs = buckets.filter(isLeftId(col("__id"))).alias("a")
       .join(buckets.filter(!isLeftId(col("__id"))).alias("b"),
         col("a.__ck") === col("b.__ck"))
@@ -662,11 +666,11 @@ object Dedup {
     // caps before any further exchange
     val vecs = emb.select(col(idCol).as("__id"), col(vecCol).as("__v"),
       sqrt(Similarity.dot(col(vecCol), col(vecCol))).as("__n"))
-    val buckets = signCodeBuckets(emb, idCol, vecCol, planes, codeRadius)
-      .join(vecs, Seq("__id"))
-      // both self-join sides reference this subtree: materialize once
-      // (lazy localCheckpoint) instead of coding + vector-joining twice
-      .localCheckpoint(eager = false)
+    // both self-join sides reference this subtree: materialize once
+    // instead of coding + vector-joining twice
+    val buckets = Share.once(
+      signCodeBuckets(emb, idCol, vecCol, planes, codeRadius)
+        .join(vecs, Seq("__id")), "embeddingNearDupTopK.buckets")
     val bucketPairs = buckets.alias("a")
       .join(buckets.alias("b"),
         col("a.__ck") === col("b.__ck") && col("a.__id") =!= col("b.__id"))
@@ -762,8 +766,8 @@ object Dedup {
                                    planes: Array[Array[Int]], codeRadius: Int,
                                    threshold: Double): DataFrame = {
     val nBits = planes.length
-    val newCoded = embeddingCodeRows(newEmb, idCol, vecCol, planes)
-      .localCheckpoint(eager = false) // coded once: chunks + residual
+    val newCoded = Share.once(embeddingCodeRows(newEmb, idCol, vecCol, planes),
+      "embeddingNearDupAgainstIndex.newCoded") // coded once: chunks + residual
     def chunked(coded: DataFrame): DataFrame =
       coded.select(col("__id"), col("__c"),
         explode(array(flatChunkKeys(col("__c"), nBits, codeRadius): _*))
@@ -985,14 +989,14 @@ object Dedup {
    * clusters are near-cliques (diameter 2–3), so convergence is fast
    * regardless of corpus size. Each round is one equi-join + one
    * hash-aggregate on the EDGE list (a vanishing fraction of the corpus),
-   * never the corpus itself; `localCheckpoint` cuts the growing lineage
-   * so round N's plan does not replay rounds 1..N−1.
+   * never the corpus itself; each round's labels are a `Share.once`, so
+   * round N's plan is a leaf over round N−1's rows, not rounds 1..N−1.
    *
    * The convergence check is FUSED into the round's single job: each
    * label row travels with its previous label through the min-aggregate,
    * and a streaming `mapPartitions` pass bumps a LongAccumulator for
    * every changed label while stripping the carried column — so the
-   * eager checkpoint both materializes the next labels AND delivers the
+   * stage that materializes the next labels also delivers the
    * changed-count, where the unfused form spent a second join+isEmpty
    * job per round re-shuffling both label sets. (Accumulators can
    * overcount on task retry; here a false non-zero only buys one extra
@@ -1002,13 +1006,12 @@ object Dedup {
   def dupClusters(pairs: DataFrame, aCol: String, bCol: String,
                   maxIters: Int = 50): DataFrame = {
     val spark = pairs.sparkSession
-    val edges = pairs.select(col(aCol).as("__src"), col(bCol).as("__dst"))
-      .union(pairs.select(col(bCol).as("__src"), col(aCol).as("__dst")))
-      .distinct()
-      .localCheckpoint()
-    var labels = edges.select(col("__src").as("id")).distinct()
-      .select(col("id"), col("id").as("cluster_id"))
-      .localCheckpoint()
+    val edges = Share.once(
+      pairs.select(col(aCol).as("__src"), col(bCol).as("__dst"))
+        .union(pairs.select(col(bCol).as("__src"), col(aCol).as("__dst")))
+        .distinct(), "dupClusters.edges")
+    var labels = Share.once(edges.select(col("__src").as("id")).distinct()
+      .select(col("id"), col("id").as("cluster_id")), "dupClusters.labels")
     val outEnc = org.apache.spark.sql.Encoders.row(labels.schema)
     var converged = false
     var i = 0
@@ -1024,14 +1027,14 @@ object Dedup {
         .groupBy("id")
         .agg(min("cluster_id").as("cluster_id"), min("__old").as("__old"))
       val changed = spark.sparkContext.longAccumulator(s"graft-cc-changed-$i")
-      val next = merged.mapPartitions { rows =>
+      labels = Share.once(merged.mapPartitions { rows =>
         rows.map { r =>
           if (r.get(1) != r.get(2)) changed.add(1L)
           org.apache.spark.sql.Row(r.get(0), r.get(1))
         }
-      }(outEnc).localCheckpoint() // eager: the one job of this round
+      }(outEnc), "dupClusters.labels")
+      labels.rdd.count() // one job: fills the share and `changed`
       converged = changed.value == 0L
-      labels = next
       i += 1
     }
     require(converged, s"dupClusters did not converge in $maxIters rounds — " +
@@ -1171,7 +1174,7 @@ object Dedup {
   }
 
   /**
-   * Shared LSH backbone: lazily-checkpointed shingle hash rows, the
+   * Shared LSH backbone: shared-once shingle hash rows, the
    * per-doc minhash signature (+ distinct-shingle count `__n`), and
    * the exploded band buckets `(__id, __bk)`.
    */
@@ -1180,15 +1183,13 @@ object Dedup {
                           charLevel: Boolean): (DataFrame, DataFrame, DataFrame) = {
     val k = bands * rowsPerBand
     // The shingle rows feed THREE consumers (signature aggregate + both
-    // sides of the intersection join); localCheckpoint materializes them
-    // once instead of recomputing the shingle pipeline per consumer
-    // (block-manager storage, reclaimed by the ContextCleaner when the
-    // plan is dropped). LAZY: materialization happens on the first
-    // action, so merely constructing/inspecting the returned plan costs
-    // nothing. At scale this is the standard persist point — the
-    // materialized rows are (id, 8 B hash), not text.
-    val sh = shingleHashRows(docs, idCol, textCol, shingleWidth, charLevel)
-      .localCheckpoint(eager = false)
+    // sides of the intersection join); the share materializes them once
+    // instead of recomputing the shingle pipeline per consumer. At scale
+    // this is the standard persist point — the materialized rows are
+    // (id, 8 B hash), not text.
+    val sh = Share.once(
+      shingleHashRows(docs, idCol, textCol, shingleWidth, charLevel),
+      "lshBackbone.sh")
 
     // one codegen'd aggregate: k min-hash columns + the distinct count
     val sigCols = (0 until k).map(j => min(xxhash64(lit(j.toLong), col("__sh"))).as(s"__m$j"))
@@ -1276,8 +1277,8 @@ object Dedup {
                      shingleWidth: Int = 3): DataFrame = {
     // three consumers (counts, candidate probe, doc arrays) — one
     // materialization of the shingle pipeline (the lshBackbone posture)
-    val sh = shingleHashRows(docs, idCol, textCol, shingleWidth)
-      .localCheckpoint(eager = false)
+    val sh = Share.once(shingleHashRows(docs, idCol, textCol, shingleWidth),
+      "subsetDocPairs.sh")
     val counts = sh.groupBy("__id")
       .agg(count(lit(1)).as("__n"), min(col("__sh")).as("__min"))
     val cand = counts
@@ -1352,8 +1353,8 @@ object Dedup {
     // convention: set arithmetic on hashes equals set arithmetic on
     // shingles up to a ~10⁻¹⁵ collision); feeds three consumers, so
     // materialize once like lshBackbone does
-    val sh = shingleHashRows(docs, idCol, textCol, shingleWidth)
-      .localCheckpoint(eager = false)
+    val sh = Share.once(shingleHashRows(docs, idCol, textCol, shingleWidth),
+      "prefixFilterJaccardJoin.sh")
     val df = sh.groupBy("__sh").agg(count(lit(1)).as("__df"))
     // doc-sized canonical sort: (df asc, element hash asc)
     val ordered = sh.join(df, "__sh")
@@ -1451,11 +1452,12 @@ object Dedup {
                                 tNum: Int, tDen: Int,
                                 shingleWidth: Int = 3): DataFrame = {
     require(tNum >= 1 && tDen >= tNum, "threshold must be in (0, 1]")
-    val histSh = index.select(col("__id"), col("__sh"))
-      .localCheckpoint(eager = false)
+    val histSh = Share.once(index.select(col("__id"), col("__sh")),
+      "prefixJaccardAgainstIndex.histSh")
     val dfH = histSh.groupBy("__sh").agg(count(lit(1)).as("__df"))
-    val newSh = shingleHashRows(newDocs, idCol, textCol, shingleWidth)
-      .localCheckpoint(eager = false)
+    val newSh = Share.once(
+      shingleHashRows(newDocs, idCol, textCol, shingleWidth),
+      "prefixJaccardAgainstIndex.newSh")
 
     def prefixOf(sh: DataFrame): DataFrame = {
       val ordered = sh.join(dfH, Seq("__sh"), "left")
@@ -1510,8 +1512,8 @@ object Dedup {
                       tNum: Int, tDen: Int,
                       shingleWidth: Int = 3): DataFrame = {
     require(tNum >= 1 && tDen >= tNum, "threshold must be in (0, 1]")
-    val sh = shingleHashRows(docs, idCol, textCol, shingleWidth)
-      .localCheckpoint(eager = false)
+    val sh = Share.once(shingleHashRows(docs, idCol, textCol, shingleWidth),
+      "containmentJoin.sh")
     val dfc = sh.groupBy("__sh").agg(count(lit(1)).as("__df"))
     val ordered = sh.join(dfc, Seq("__sh"))
       .groupBy("__id")
@@ -1582,11 +1584,12 @@ object Dedup {
                               tNum: Int, tDen: Int,
                               shingleWidth: Int = 3): DataFrame = {
     require(tNum >= 1 && tDen >= tNum, "threshold must be in (0, 1]")
-    val histSh = index.select(col("__id"), col("__sh"))
-      .localCheckpoint(eager = false)
+    val histSh = Share.once(index.select(col("__id"), col("__sh")),
+      "containmentAgainstIndex.histSh")
     val dfH = histSh.groupBy("__sh").agg(count(lit(1)).as("__df"))
-    val newSh = shingleHashRows(newDocs, idCol, textCol, shingleWidth)
-      .localCheckpoint(eager = false)
+    val newSh = Share.once(
+      shingleHashRows(newDocs, idCol, textCol, shingleWidth),
+      "containmentAgainstIndex.newSh")
 
     def prefixOf(sh: DataFrame): DataFrame = {
       val ordered = sh.join(dfH, Seq("__sh"), "left")

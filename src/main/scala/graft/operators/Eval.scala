@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Share
+
 /**
  * Classifier evaluation metrics for corpus-quality gates: once a
  * quality scorer (`TextMetrics.hashedLinearScore`, a perplexity model,
@@ -436,10 +438,9 @@ object Eval {
         sum(when(col(labelCol), 1L).otherwise(0L)).as("__s"))
     val wc = Window.partitionBy(by.map(col): _*).orderBy(col("__i"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pre = bins
+    val pre = Share.once(bins
       .withColumn("__cw", sum(col("__w")).over(wc))
-      .withColumn("__cs", sum(col("__s")).over(wc))
-      .localCheckpoint()
+      .withColumn("__cs", sum(col("__s")).over(wc)), "isotonicCalibration.pre")
     val j = pre.select((by.map(col) :+ col("__i").as("__j") :+
       (col("__cw") - col("__w")).as("__wj0") :+
       (col("__cs") - col("__s")).as("__sj0")): _*)
@@ -819,7 +820,6 @@ object Eval {
     val cells = df.where(col(colA).isNotNull && col(colB).isNotNull)
       .select(col(colA).as("__a"), col(colB).as("__b"))
       .groupBy("__a", "__b").agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
     val ma = cells.groupBy("__a").agg(sum(col("__c")).as("__ca"))
     val mb = cells.groupBy("__b").agg(sum(col("__c")).as("__cb"))
     val nr = cells.agg(sum(col("__c")).as("__n"))
@@ -921,16 +921,15 @@ object Eval {
                    nCol: String, winsCol: String,
                    iters: Int = 5): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val g = games.select(col(itemCol).as("__i"), col(oppCol).as("__j"),
-        col(nCol).cast("long").as("__n"),
-        col(winsCol).cast("long").as("__w"))
-      .where(col("__n") > 0L)
-      .localCheckpoint(eager = false)
-    val items = g.groupBy(col("__i").as("__id"))
-      .agg(sum(col("__w")).as("n_wins"), sum(col("__n")).as("n_games"))
-      .localCheckpoint(eager = false)
+    val g = Share.once(
+      games.select(col(itemCol).as("__i"), col(oppCol).as("__j"),
+          col(nCol).cast("long").as("__n"),
+          col(winsCol).cast("long").as("__w"))
+        .where(col("__n") > 0L), "bradleyTerry.g")
+    val items = Share.once(g.groupBy(col("__i").as("__id"))
+      .agg(sum(col("__w")).as("n_wins"), sum(col("__n")).as("n_games")),
+      "bradleyTerry.items")
     var w = items.select(col("__id"), lit(1.0d).as("__p"))
-      .localCheckpoint()
     for (_ <- 1 to iters) {
       val d = g
         .join(w.select(col("__id").as("__i"), col("__p").as("__pi")), "__i")
@@ -947,11 +946,10 @@ object Eval {
             .otherwise(0.0d).as("__r"))
       val s = raw.agg(
         sum(col("__r").cast("decimal(28,12)")).cast("double").as("__s"))
-      w = raw.crossJoin(broadcast(s))
+      w = Share.once(raw.crossJoin(broadcast(s))
         .select(col("__id"),
           when(col("__s") > 0.0d, round(col("__r") / col("__s"), 12))
-            .otherwise(0.0d).as("__p"))
-        .localCheckpoint()
+            .otherwise(0.0d).as("__p")), "bradleyTerry.w")
     }
     items.join(w, "__id")
       .select(col("__id").as("item"), col("n_wins"), col("n_games"),
@@ -1220,10 +1218,9 @@ object Eval {
     val grams = bleuGramTable(docs, idCol, textCol)
     // pair-table-sized, consumed FOUR times (the contract check below
     // plus cand/ref/lens): materialize once (r17, §2) — the check's
-    // eager action fills the checkpoint, the three joins read it
-    val pm = pairMap.select(col(candIdCol).as("__cid"),
-        col(refIdCol).as("__rid"))
-      .localCheckpoint(eager = false)
+    // action fills the share, the three joins read it
+    val pm = Share.once(pairMap.select(col(candIdCol).as("__cid"),
+        col(refIdCol).as("__rid")), "corpusBleu.pm")
     // SINGLE-reference contract (checked): a duplicated candidate id
     // here would duplicate cand rows and double-count the clip and
     // total sums, silently inflating precision — [[corpusBleuMulti]]
@@ -1245,9 +1242,8 @@ object Eval {
     // doc-count rows of (id, len), but each evaluation re-tokenizes
     // the corpus — and the cand/ref probes below are two consumers:
     // materialize once (r17, §2)
-    val dl = docs.select(col(idCol).as("__id"),
-        size(bleuToks(textCol)).cast("long").as("__len"))
-      .localCheckpoint(eager = false)
+    val dl = Share.once(docs.select(col(idCol).as("__id"),
+        size(bleuToks(textCol)).cast("long").as("__len")), "corpusBleu.dl")
     val lens = pm
       .join(dl.select(col("__id").as("__cid"), col("__len").as("__cl")),
         Seq("__cid"))
@@ -1291,9 +1287,8 @@ object Eval {
     // clip max, the effective-length pass) — and callers often derive
     // it from a window program (q285's per-lang lead()): materialize
     // once (r17, §2)
-    val pm = pairMap.select(col(candIdCol).as("__cid"),
-        col(refIdCol).as("__rid")).distinct()
-      .localCheckpoint(eager = false)
+    val pm = Share.once(pairMap.select(col(candIdCol).as("__cid"),
+        col(refIdCol).as("__rid")).distinct(), "corpusBleuMulti.pm")
     val cands = pm.select(col("__cid")).distinct()
     val cand = grams.join(cands, col("__id") === col("__cid"))
       .select(col("__cid").as("__p"), col("__n"), col("__gh"),
@@ -1307,9 +1302,8 @@ object Eval {
         coalesce(col("__cr"), lit(0L)).as("__cr"))
     // doc-count rows, two consumers, each evaluation re-tokenizes the
     // corpus: materialize once (r17, §2)
-    val dl = docs.select(col(idCol).as("__id"),
-        size(bleuToks(textCol)).cast("long").as("__len"))
-      .localCheckpoint(eager = false)
+    val dl = Share.once(docs.select(col(idCol).as("__id"),
+        size(bleuToks(textCol)).cast("long").as("__len")), "corpusBleuMulti.dl")
     // effective reference length per candidate: closest, ties shorter
     val perCand = pm
       .join(dl.select(col("__id").as("__cid"), col("__len").as("__cl")),
@@ -1345,13 +1339,12 @@ object Eval {
     * BleuGramsSpec). */
   private def bleuGramTable(docs: DataFrame, idCol: String,
                             textCol: String): DataFrame = {
-    docs
+    Share.once(docs
       .select(col(idCol).as("__id"),
         explode(graft.functions.BleuGrams(
           split(lower(trim(col(textCol))), " "))).as("__g"))
       .groupBy(col("__id"), col("__g.n").as("__n"), col("__g.gh").as("__gh"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("__c")), "bleuGramTable.grams")
   }
 
   /** The shared BLEU tail: per-n totals/clips, the 4-way pivot, and
@@ -1859,7 +1852,6 @@ object Eval {
     val cells = df.where(col(colA).isNotNull && col(colB).isNotNull)
       .select(col(colA).as("__a"), col(colB).as("__b"))
       .groupBy("__a", "__b").agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
     val ma = cells.groupBy("__a").agg(sum(col("__c")).as("__ca"))
     val mb = cells.groupBy("__b").agg(sum(col("__c")).as("__cb"))
     val nr = cells.agg(sum(col("__c")).as("__n"),

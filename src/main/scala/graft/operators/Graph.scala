@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Share
+
 /**
  * Graph analytics over edge lists — the PageRank-style importance
  * scores a corpus pipeline uses for URL/domain authority weighting
@@ -33,7 +35,7 @@ object Graph {
    * Output: (`id`, `degree`, `rank`) — rank at 12 dp.
    *
    * Scale shape: edges and degrees materialize once
-   * (`localCheckpoint`) and every iteration joins them by source key —
+   * (`Share.once`) and every iteration joins them by source key —
    * rank state is node-cardinality, the join is edge-cardinality, and
    * N arrives as a ONE-ROW broadcast (the documented no-collect scalar
    * pattern). Iterations are a fixed constant; convergence-to-epsilon
@@ -69,52 +71,46 @@ object Graph {
     // Unweighted: distinct edges, per-node even split (w ≡ 1).
     // Weighted: per-edge BIGINT weights summed over duplicates; the
     // per-edge share divides by the source's exact out-weight.
-    val e = weightCol match {
+    val e = Share.once(weightCol match {
       case None =>
         edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
           .where(col("__src").isNotNull && col("__dst").isNotNull)
           .distinct()
           .withColumn("__w", lit(1L))
-          .localCheckpoint()
       case Some(wc) =>
         edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
             col(wc).cast("long").as("__w"))
           .where(col("__src").isNotNull && col("__dst").isNotNull &&
             col("__w") > 0L)
           .groupBy("__src", "__dst").agg(sum(col("__w")).as("__w"))
-          .localCheckpoint()
-    }
-    val deg = e.groupBy("__src").agg(sum(col("__w")).as("__d"))
-      .localCheckpoint()
+    }, "pageRank.edges")
+    val deg = Share.once(e.groupBy("__src").agg(sum(col("__w")).as("__d")),
+      "pageRank.deg")
     // loop-invariant hoist (r16): every iteration used to re-join the
     // edge list to the out-degree table; (__w, __d) never change, so
     // attach them once and each round pays ONE join (edges ⋈ ranks).
     // The share arithmetic is untouched (still __r · __w / __d on the
     // original columns), so rounding replays bit-for-bit.
-    val ed = e.join(deg, "__src")
-      .select(col("__src"), col("__dst"), col("__w"), col("__d"))
-      // lazy: materializes with the first iteration's job instead of
-      // paying a separate eager materialization pass (r16 A/B)
-      .localCheckpoint(eager = false)
+    val ed = Share.once(e.join(deg, "__src")
+      .select(col("__src"), col("__dst"), col("__w"), col("__d")),
+      "pageRank.ed")
     val nn = deg.agg(count(lit(1)).as("__nn"))
     var ranks = deg.select(col("__src").as("__id"))
       .crossJoin(broadcast(nn))
       .select(col("__id"), round(lit(1.0d) / col("__nn"), 12).as("__r"))
-      .localCheckpoint()
     for (_ <- 1 to iters) {
       val contrib = ed.join(ranks, ed("__src") === ranks("__id"))
         .select(ed("__dst").as("__id"),
           round(col("__r") * col("__w") / col("__d"), 12)
             .cast("decimal(28,12)").as("__c"))
         .groupBy("__id").agg(sum(col("__c")).as("__s"))
-      ranks = deg.select(col("__src").as("__id"))
+      ranks = Share.once(deg.select(col("__src").as("__id"))
         .join(contrib, Seq("__id"), "left")
         .crossJoin(broadcast(nn))
         .select(col("__id"),
           round(lit(teleport) / col("__nn") +
             lit(damping) * coalesce(col("__s").cast("double"), lit(0.0d)), 12)
-            .as("__r"))
-        .localCheckpoint()
+            .as("__r")), "pageRank.ranks")
     }
     ranks.join(deg, ranks("__id") === deg("__src"))
       .select(col("__id").as("id"), col("__d").as("degree"),
@@ -145,13 +141,14 @@ object Graph {
    * ever needs it).
    */
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    // the degree count and all three join sides read `canon` in one
+    // plan: exchange reuse runs its distinct once
     val canon = edges
       .select(least(col(srcCol), col(dstCol)).as("__a"),
         greatest(col(srcCol), col(dstCol)).as("__b"))
       .where(col("__a").isNotNull && col("__b").isNotNull &&
         col("__a") =!= col("__b"))
       .distinct()
-      .localCheckpoint()
     val deg = canon.select(col("__a").as("__id"))
       .unionAll(canon.select(col("__b").as("__id")))
       .groupBy("__id").agg(count(lit(1)).as("__d"))
@@ -192,7 +189,7 @@ object Graph {
    *
    * Scale shape: state²-bounded edge table, one broadcast state
    * count; per round, one vocab-bounded join + aggregation; each
-   * round's π is a localCheckpoint so round r+1 does not recompute
+   * round's π is a `Share.once` so round r+1 does not recompute
    * rounds 1..r.
    */
   def markovStationary(trans: DataFrame, fromCol: String, toCol: String,
@@ -201,19 +198,18 @@ object Graph {
     val t0 = trans.select(col(fromCol).as("__f"), col(toCol).as("__t"),
         col(nCol).cast("long").as("__n"))
       .where(col("__f").isNotNull && col("__t").isNotNull && col("__n") > 0L)
-    val states = t0.select(col("__f").as("__id"))
-      .unionByName(t0.select(col("__t").as("__id"))).distinct()
-      .localCheckpoint()
+    val states = Share.once(t0.select(col("__f").as("__id"))
+      .unionByName(t0.select(col("__t").as("__id"))).distinct(),
+      "markovStationary.states")
     val absorbing = states.join(t0.select(col("__f").as("__id")).distinct(),
       Seq("__id"), "left_anti")
-    val t = t0.unionByName(absorbing.select(col("__id").as("__f"),
-      col("__id").as("__t"), lit(1L).as("__n"))).localCheckpoint()
+    val t = Share.once(t0.unionByName(absorbing.select(col("__id").as("__f"),
+      col("__id").as("__t"), lit(1L).as("__n"))), "markovStationary.t")
     val outW = t.groupBy(col("__f")).agg(sum(col("__n")).as("__out"))
     val nn = states.agg(count(lit(1)).as("__nn"))
     var pi = states
       .crossJoin(broadcast(nn))
       .select(col("__id"), round(lit(1.0d) / col("__nn"), 12).as("__p"))
-      .localCheckpoint()
     for (_ <- 1 to iters) {
       val contrib = t.join(pi, t("__f") === pi("__id"))
         .join(outW, "__f")
@@ -221,11 +217,10 @@ object Graph {
           round(col("__p") * col("__n") / col("__out"), 12)
             .cast("decimal(28,12)").as("__c"))
         .groupBy("__id").agg(sum(col("__c")).as("__s"))
-      pi = states.join(contrib, Seq("__id"), "left")
+      pi = Share.once(states.join(contrib, Seq("__id"), "left")
         .select(col("__id"),
           round(coalesce(col("__s").cast("double"), lit(0.0d)), 12)
-            .as("__p"))
-        .localCheckpoint()
+            .as("__p")), "markovStationary.pi")
     }
     pi.select(col("__id").as("state"), round(col("__p"), 6).as("stationary"))
   }
@@ -302,10 +297,9 @@ object Graph {
       .where(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
       .distinct()
-    val sym = und
+    val sym = Share.once(und
       .union(und.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint(eager = false)
+      .distinct(), "kHopReach.sym")
     var reach = sym
     var result = reach.groupBy("a").agg(count(lit(1)).as("n_hop1"))
     for (k <- 2 to hops) {
@@ -341,7 +335,7 @@ object Graph {
    * core), and `n_core` (the core's node count, same on every row).
    *
    * Scale shape: per round, one edge-list-bound degree aggregation
-   * and two semi-joins keyed on node ids, checkpointed (the
+   * and two semi-joins keyed on node ids, shared once (the
    * [[pageRankImpl]] iteration posture). Peel depth, not data size,
    * bounds the rounds; the verify is ONE count action.
    */
@@ -349,25 +343,27 @@ object Graph {
             maxRounds: Int = 6): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    val und = edges.select(col(srcCol).as("__a"), col(dstCol).as("__b"))
+    val und = Share.once(edges
+      .select(col(srcCol).as("__a"), col(dstCol).as("__b"))
       .where(col("__a").isNotNull && col("__b").isNotNull &&
         col("__a") =!= col("__b"))
       .select(least(col("__a"), col("__b")).as("__x"),
         greatest(col("__a"), col("__b")).as("__y"))
-      .distinct()
-      .localCheckpoint()
+      .distinct(), "kCore.und")
     def degrees(e: DataFrame): DataFrame =
       e.select(col("__x").as("id"))
         .unionAll(e.select(col("__y").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
     val peeled = (1 to maxRounds).foldLeft(und) { (e, _) =>
-      val keep = degrees(e).where(col("d") >= k.toLong)
-        .select("id").localCheckpoint()
-      e.join(keep.withColumnRenamed("id", "__x"), Seq("__x"), "left_semi")
-        .join(keep.withColumnRenamed("id", "__y"), Seq("__y"), "left_semi")
-        .localCheckpoint()
+      // both semi-joins read `keep` in one plan: exchange reuse runs its
+      // degree aggregation once
+      val keep = degrees(e).where(col("d") >= k.toLong).select("id")
+      Share.once(e
+        .join(keep.withColumnRenamed("id", "__x"), Seq("__x"), "left_semi")
+        .join(keep.withColumnRenamed("id", "__y"), Seq("__y"), "left_semi"),
+        "kCore.edges")
     }
-    val deg = degrees(peeled).localCheckpoint()
+    val deg = Share.once(degrees(peeled), "kCore.deg")
     val unconverged = deg.where(col("d") < k.toLong).count()
     require(unconverged == 0L,
       s"kCore: peel not converged after $maxRounds rounds " +

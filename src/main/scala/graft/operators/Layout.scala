@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Share
+
 /**
  * Data-layout engineering for multi-dimensional file skipping: at
  * 100 TB the dominant cost of a selective query is which files its
@@ -60,24 +62,22 @@ object Layout {
   def layoutAudit(df: DataFrame, xCol: String, yCol: String,
                   bits: Int = 16, files: Int = 16): DataFrame = {
     require(files >= 2, "files must be >= 2")
-    val base = df.select(col(xCol).cast("long").as("__x"),
+    val base = Share.once(df.select(col(xCol).cast("long").as("__x"),
         col(yCol).cast("long").as("__y"))
-      .where(col("__x").isNotNull && col("__y").isNotNull)
-      .localCheckpoint(eager = false)
+      .where(col("__x").isNotNull && col("__y").isNotNull), "layoutAudit.base")
     val stats = base.agg(min("__x").as("__xmin"), max("__x").as("__xmax"),
       min("__y").as("__ymin"), max("__y").as("__ymax"))
     // min/max-normalized integer grid ranks: (v − min)·2^bits div
     // (max − min + 1) — the `div` operator keeps this pure BIGINT (a
     // double division + floor misbuckets once span·rank crosses 2^53)
-    val keyed = base.crossJoin(broadcast(stats))
+    val keyed = Share.once(base.crossJoin(broadcast(stats))
       .withColumn("__bx",
         expr(s"((__x - __xmin) * ${1L << bits}) div (__xmax - __xmin + 1)"))
       .withColumn("__by",
         expr(s"((__y - __ymin) * ${1L << bits}) div (__ymax - __ymin + 1)"))
       .withColumn("__zkey", interleaveBits(col("__bx"), col("__by"), bits))
       .withColumn("__lkey",
-        col("__bx") * lit(1L << bits) + col("__by"))
-      .localCheckpoint(eager = false)
+        col("__bx") * lit(1L << bits) + col("__by")), "layoutAudit.keyed")
 
     def audit(name: String, keyCol: String): DataFrame = {
       val cuts = Relational.exactQuantiles(keyed, Nil, keyCol,
@@ -161,10 +161,9 @@ object Layout {
   def hilbertAudit(df: DataFrame, xCol: String, yCol: String,
                    bits: Int = 16, files: Int = 16): DataFrame = {
     require(files >= 2, "files must be >= 2")
-    val base = df.select(col(xCol).cast("long").as("__x"),
+    val base = Share.once(df.select(col(xCol).cast("long").as("__x"),
         col(yCol).cast("long").as("__y"))
-      .where(col("__x").isNotNull && col("__y").isNotNull)
-      .localCheckpoint(eager = false)
+      .where(col("__x").isNotNull && col("__y").isNotNull), "hilbertAudit.base")
     val stats = base.agg(min("__x").as("__xmin"), max("__x").as("__xmax"),
       min("__y").as("__ymin"), max("__y").as("__ymax"))
     val bucketed = base.crossJoin(broadcast(stats))
@@ -173,8 +172,9 @@ object Layout {
       .withColumn("__by",
         expr(s"((__y - __ymin) * ${1L << bits}) div (__ymax - __ymin + 1)"))
       .withColumn("__zkey", interleaveBits(col("__bx"), col("__by"), bits))
-    val keyed = hilbertAppend(bucketed, "__bx", "__by", bits, "__hkey")
-      .localCheckpoint(eager = false)
+    val keyed = Share.once(
+      hilbertAppend(bucketed, "__bx", "__by", bits, "__hkey"),
+      "hilbertAudit.keyed")
 
     def audit(name: String, keyCol: String): DataFrame = {
       val cuts = Relational.exactQuantiles(keyed, Nil, keyCol,

@@ -182,9 +182,9 @@ object Profile {
           sum((q(a) * q(b)).cast("decimal(38,12)"))
             .cast("double").as(s"__sp_${a}_$b")
         }.toSeq
-    // ONE row; checkpoint so the C(C-1)/2 pair projections replay it
-    // instead of re-running the scan per pair
-    val one = complete.agg(sums.head, sums.tail: _*).localCheckpoint()
+    // ONE row; the C(C-1)/2 pair projections sit in one plan, so
+    // exchange reuse runs the scan + aggregate once
+    val one = complete.agg(sums.head, sums.tail: _*)
     val pairRows = cols.combinations(2).map { case Seq(a, b) =>
       val n = col("__n").cast("double")
       val cov = n * col(s"__sp_${a}_$b") - col(s"__s_$a") * col(s"__s_$b")

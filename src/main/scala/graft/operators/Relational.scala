@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 
+import graft.core.Share
+
 /**
  * Record-level and relational operators re-expressing the reference's
  * transform/materialization surface (SURVEY.md §2.2, §2.4, §2.5) as pure
@@ -281,7 +283,7 @@ object Relational {
     val counts = counts0.withColumnRenamed(cntCol, "__cnt")
     // NOTE (r16, measured): four consumers re-evaluate this subtree
     // (stats, withStats, and — via bucketed — the offsets branch and
-    // the window pass), and a localCheckpoint here LOOKS like the
+    // the window pass), and materializing it once here LOOKS like the
     // obvious dedup. It is a wall-clock pessimization (q154 5.2 s →
     // 8.1 s, q209/q136/q274/q153 all +10-25% at sf0.1): on a
     // distinct-heavy value column the materialized compression is
@@ -527,7 +529,7 @@ object Relational {
     // overlap-join sides): materialize it once instead of re-running
     // the caller's upstream (typically a sessionize window pass) three
     // times (r16)
-    val base = intervals.localCheckpoint(eager = false)
+    val base = Share.once(intervals, "intervalOverlapPartnerTopK.base")
     val l = base.select(col(keyCol).as("__k1"),
       col(loCol).as("__lo1"), col(hiCol).as("__hi1"))
     val r = base.select(col(keyCol).as("__k2"),

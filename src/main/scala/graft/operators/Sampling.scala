@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Share
+
 /**
  * Deterministic corpus sampling (north star: training-data mixing) —
  * the subsampling/quota steps a data-mixture pipeline runs after dedup
@@ -529,11 +531,10 @@ object Sampling {
     // one __id) — the argmin negates the GAIN (a count, always a
     // safe negation) instead of the id, and the struct carries the
     // winning id out directly
-    val rows = docs.select(col(idCol).as("__id"), units.as("__t"))
+    val rows = Share.once(docs.select(col(idCol).as("__id"), units.as("__t"))
       .where(col("__id").isNotNull && col("__t") =!= "")
       .select(col("__id"), TextMetrics.tokenHash(col("__t")).as("__h"))
-      .distinct()
-      .localCheckpoint()
+      .distinct(), "coverageSelect.rows")
     var selected: DataFrame = null
     var covered: DataFrame = null
     for (r <- 1 to k) {
@@ -546,12 +547,11 @@ object Sampling {
         .where(col("__m").isNotNull)
         .select(lit(r).as("sel_round"), col("__m.__id").as("__id"),
           (-col("__m.__ng")).as("gain"))
-      selected =
-        if (r == 1) next.localCheckpoint()
-        else selected.unionAll(next).localCheckpoint()
+      selected = Share.once(if (r == 1) next else selected.unionAll(next),
+        "coverageSelect.selected")
       covered = rows
         .join(selected.select(col("__id")), Seq("__id"), "left_semi")
-        .select(col("__h")).distinct().localCheckpoint()
+        .select(col("__h")).distinct()
     }
     val w = Window.orderBy(col("sel_round"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

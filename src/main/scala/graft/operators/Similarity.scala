@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Share
+
 /**
  * Similarity search over an embedding column (SURVEY.md §7 step 7):
  * brute-force cosine top-k as the baseline, and a *provably exact*
@@ -1000,7 +1002,7 @@ object Similarity {
    *  - the only exchange carries (cell, count, d partial sums) —
    *    C·(d+2) values after map-side combine, independent of N;
    *  - empty cells keep their previous centroid (left join on the C-row
-   *    set); each round's result is a C-row localCheckpoint so round
+   *    set); each round's result is a C-row `Share.once` so round
    *    r+1's broadcast does not recompute rounds 1..r.
    * Integer-exactness bound: per-component |sum| ≤ n_cell·max|q| — at
    * quantize's ×1024 grid that stays inside double's 2^53 for any cell
@@ -1044,11 +1046,11 @@ object Similarity {
         array((0 until dim).map(i =>
           round(col(s"__s$i") / col("__nn"))): _*).as("__nv"),
         col("__nn"))
-      cent.join(refreshed, cent("__cid") === refreshed("__cell"), "left")
-        .select(cent("__cid"),
-          coalesce(col("__nv"), cent("__cv")).as("__cv"),
-          coalesce(col("__nn"), lit(0L)).as("__n"))
-        .localCheckpoint()
+      Share.once(
+        cent.join(refreshed, cent("__cid") === refreshed("__cell"), "left")
+          .select(cent("__cid"),
+            coalesce(col("__nv"), cent("__cv")).as("__cv"),
+            coalesce(col("__nn"), lit(0L)).as("__n")), "kmeansCentroids.cent")
     }
   }
 
@@ -1273,13 +1275,12 @@ object Similarity {
         array((0 until width).map(i =>
           round(col(s"__s$i") / col("__nn"))): _*).as("__nv"),
         col("__nn"))
-      cent.join(refreshed,
+      Share.once(cent.join(refreshed,
           cent("__sub") === refreshed("__rs") &&
             cent("__cid") === refreshed("__cell"), "left")
         .select(cent("__sub"), cent("__cid"),
           coalesce(col("__nv"), cent("__cv")).as("__cv"),
-          coalesce(col("__nn"), lit(0L)).as("__n"))
-        .localCheckpoint()
+          coalesce(col("__nn"), lit(0L)).as("__n")), "pqTrain.cent")
     }
   }
 
@@ -1403,7 +1404,7 @@ object Similarity {
    * Scale shape: k passes over the corpus, each ONE scan folding a
    * ≤ k-row broadcast selected-set array in-row (the q75 centroid
    * pattern) + a 1-row argmax — no pairwise join, no k·n shuffle.
-   * The corpus quantizes once (localCheckpoint) and never reshuffles.
+   * The corpus quantizes once (`Share.once`) and never reshuffles.
    */
   def coresetSelect(emb: DataFrame, idCol: String, vecCol: String,
                     k: Int): DataFrame = {
@@ -1411,15 +1412,14 @@ object Similarity {
     // q·q and the selected vectors' self-dots are loop-invariant —
     // hoisted (the kmeansCentroids trick, r17) so the fold pays one
     // d-wide dot per selected vector; bit-identical arithmetic
-    val q = emb.select(col(idCol).cast("long").as("__id"),
+    val q = Share.once(emb.select(col(idCol).cast("long").as("__id"),
         quantize(col(vecCol)).as("__q"))
-      .where(col("__id").isNotNull && col("__q").isNotNull)
-      .localCheckpoint()
+      .where(col("__id").isNotNull && col("__q").isNotNull), "coresetSelect.q")
     val seed = q.agg(min(col("__id")).as("__sid"))
-    var selected = q.join(broadcast(seed), col("__id") === col("__sid"))
-      .select(lit(1).as("sel_round"), col("__id"), col("__q"),
-        lit(null).cast("double").as("radius"))
-      .localCheckpoint()
+    var selected = Share.once(
+      q.join(broadcast(seed), col("__id") === col("__sid"))
+        .select(lit(1).as("sel_round"), col("__id"), col("__q"),
+          lit(null).cast("double").as("radius")), "coresetSelect.selected")
     for (r <- 2 to k) {
       val selArr = selected
         .agg(collect_list(struct(col("__q").as("v"),
@@ -1440,7 +1440,7 @@ object Similarity {
       val next = q.join(broadcast(best), col("__id") === col("__bid"))
         .select(lit(r).as("sel_round"), col("__id"), col("__q"),
           col("__bd").as("radius"))
-      selected = selected.unionAll(next).localCheckpoint()
+      selected = Share.once(selected.unionAll(next), "coresetSelect.selected")
     }
     selected.select(col("sel_round"), col("__id").as("vec_id"),
       col("radius"))
@@ -1479,10 +1479,9 @@ object Similarity {
                    iters: Int = 5): DataFrame = {
     require(dims >= 1 && iters >= 1, "dims and iters must be >= 1")
     val spark = emb.sparkSession
-    val base = emb
+    val base = Share.once(emb
       .select(quantize(col(vecCol).cast("array<double>")).as("__q"))
-      .where(size(col("__q")) === dims)
-      .localCheckpoint(eager = false)
+      .where(size(col("__q")) === dims), "topComponent.base")
     val st = base
       .select(posexplode(col("__q")).as(Seq("__p", "__qi")))
       .groupBy("__p")
@@ -1763,8 +1762,9 @@ object Similarity {
     require(pairs.nonEmpty, "need at least one audit pair")
     val spark = emb.sparkSession
     import spark.implicits._
-    val projected = randomProject(emb, idCol, vecCol, inDims, outDims)
-      .localCheckpoint()
+    val projected = Share.once(
+      randomProject(emb, idCol, vecCol, inDims, outDims),
+      "jlDistanceAudit.projected")
     val pairDf = pairs.toDF("a", "b")
     def d2(x: Column, y: Column): Column =
       aggregate(zip_with(x, y, (u, v) => (u - v) * (u - v)),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Share
+
 /**
  * Pretraining-corpus quality operators beyond the reference's surface
  * (SURVEY §LLM-pipeline ops): Gopher/MassiveText-style repetition
@@ -602,19 +604,18 @@ object TextMetrics {
    * strings — 1-row state, the kmeans-centroid precedent); ONE
    * corpus pass emits phrases (short strings, vocab-bounded
    * aggregations — the [[pmiCollocations]] posture); word stats,
-   * phrase counts, and scores derive from checkpointed phrase
-   * tables; TakeOrdered top-k.
+   * phrase counts, and scores derive from shared phrase tables;
+   * TakeOrdered top-k.
    */
   def rakeKeywords(docs: DataFrame, textCol: String, k: Int = 25,
                    stopK: Int = 20, maxPhraseLen: Int = 4): DataFrame = {
     require(k >= 1 && stopK >= 1 && maxPhraseLen >= 1,
       "rakeKeywords: k, stopK, maxPhraseLen must be >= 1")
-    val phr = rakePhrases(docs, textCol,
-        rakeStopwords(docs, textCol, stopK), maxPhraseLen)
-      .localCheckpoint()
+    val phr = Share.once(rakePhrases(docs, textCol,
+        rakeStopwords(docs, textCol, stopK), maxPhraseLen),
+      "rakeKeywords.phr")
     val ws = rakeWordScoresFrom(phr)
     val pc = phr.groupBy("phrase").agg(count(lit(1)).as("n"))
-      .localCheckpoint()
     val pscore = pc.select(col("phrase"))
       .select(col("phrase"), explode(split(col("phrase"), " ")).as("wd"))
       .join(ws, "wd")
@@ -741,17 +742,15 @@ object TextMetrics {
     // ONE corpus pass for unigrams AND bigrams (r17; the r16 shape ran
     // one tokenize+explode+aggregate pass per table): each doc emits
     // its tokens tagged 0 and its bigrams tagged 1 through a single
-    // explode, one map-side-combined count per (tag, gram), and the
-    // vocab-bounded result localCheckpoints once for the four
-    // downstream consumers (totals, the filtered bigram table, and the
-    // two unigram join probes).
+    // explode and one map-side-combined count per (tag, gram). Its four
+    // consumers (totals, bigram table, two unigram probes) sit in one
+    // plan: exchange reuse runs the count once.
     val grams = docs.select(explode(concat(
         transform(w, t => struct(lit(0).as("tag"), t.as("g"))),
         transform(bigrams, b => struct(lit(1).as("tag"), b.as("g")))))
         .as("__tg"))
       .groupBy(col("__tg.tag").as("__tag"), col("__tg.g").as("__g"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
     val uni = grams.filter(col("__tag") === 0)
       .select(col("__g").as("tok"), col("__c").as("__cu"))
     val biAll = grams.filter(col("__tag") === 1)
@@ -885,12 +884,11 @@ object TextMetrics {
       .where(col("__df") <=
         greatest(lit(2L), (col("__nd") * maxDfPpm) / lit(1000000L)))
       .select(col("tok"), col("__df"))
-    val w = tf.join(dfreq, "tok").crossJoin(broadcast(nd))
+    val w = Share.once(tf.join(dfreq, "tok").crossJoin(broadcast(nd))
       .select(col("tok"), col("__id"),
         (col("__tf") * floor(log(col("__nd").cast("double") /
           col("__df").cast("double")) * 1e6d + 0.5d).cast("long"))
-          .as("__w"))
-      .localCheckpoint()
+          .as("__w")), "sparseCosinePairs.w")
     def p(a: Column, b: Column): Column =
       (a.cast("decimal(19,0)") * b.cast("decimal(19,0)"))
         .cast("decimal(38,0)")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.matchers.should.Matchers
 
 /**
@@ -368,5 +370,20 @@ class PlanQualitySpec extends SparkTestBase with Matchers {
       plan(Queries.q20) should include regex "\\*\\(\\d+\\) (Project|Filter)"
       plan(Queries.q27) should include regex "\\*\\(\\d+\\) Project"
     } finally spark.conf.set(key, prev)
+  }
+
+  test("src/main shares intermediates only through Share.once (no localCheckpoint)") {
+    // a local checkpoint cuts lineage: losing the executor that holds a
+    // block fails every later query over it (ShareFaultSpec)
+    val root = new java.io.File("src/main")
+    assert(root.isDirectory, s"no source tree at ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val hits = for {
+      f <- files(root).filter(_.getName.endsWith(".scala"))
+      (line, n) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      if line.contains("localCheckpoint")
+    } yield s"${f.getPath}:${n + 1}: ${line.trim}"
+    withClue(hits.mkString("\n")) { hits shouldBe empty }
   }
 }

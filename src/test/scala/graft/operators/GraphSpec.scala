@@ -25,6 +25,15 @@ class GraphSpec extends SparkTestBase with Matchers {
     assert(math.abs(out.values.map(_._2).sum - 1.0) < 1e-6)
   }
 
+  test("pageRank: the result plan does not grow with iterations") {
+    // each round's ranks are a Share.once leaf, so round r's plan never
+    // embeds rounds 1..r-1
+    val e = sym(Seq(("a", "b"), ("b", "c"), ("c", "d"), ("a", "d")))
+    def nodes(iters: Int) = Graph.pageRank(e, "src", "dst", iters)
+      .queryExecution.analyzed.collect { case n => n }.size
+    nodes(8) shouldBe nodes(2)
+  }
+
   test("pageRank: a star's center outranks its leaves") {
     val e = sym(Seq(("hub", "l1"), ("hub", "l2"), ("hub", "l3")))
     val out = Graph.pageRank(e, "src", "dst", iters = 3)

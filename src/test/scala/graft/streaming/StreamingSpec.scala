@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 import graft.{Queries, SparkTestBase}
-import graft.core.Tables
+import graft.core.{Share, Tables}
 import graft.operators.{Dedup, Similarity}
 
 /** The sf0.001 events row as a typed streaming record (ts is NTZ →
@@ -1239,8 +1239,8 @@ class StreamingSpec extends SparkTestBase with Matchers {
     val emb = graft.core.Tables.embeddings(spark, sf0001)
       .withColumn("e", col("embedding").cast("array<double>"))
       .select("vec_id", "e")
-    val book = Similarity.pqTrain(emb, "vec_id", "e", m = 4, dim = 64,
-      centroidStride = 37L, iters = 1).localCheckpoint()
+    val book = Share.once(Similarity.pqTrain(emb, "vec_id", "e", m = 4,
+      dim = 64, centroidStride = 37L, iters = 1), "pqCodebook")
     val batchCodes = Similarity.pqEncode(emb, "vec_id", "e", book, m = 4, dim = 64)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     // the same operator, input swapped for an unbounded source: the
@@ -1274,10 +1274,10 @@ class StreamingSpec extends SparkTestBase with Matchers {
     val docs = graft.core.Tables.documents(spark, sf0001)
       .select("doc_id", "text")
     val hist = docs.filter(col("doc_id") % 10 =!= 0)
-    val stops = TextMetrics.rakeStopwords(hist, "text", stopK = 20)
-      .localCheckpoint()
-    val wsTab = TextMetrics.rakeWordScores(hist, "text", stops)
-      .localCheckpoint()
+    val stops = Share.once(
+      TextMetrics.rakeStopwords(hist, "text", stopK = 20), "rakeStops")
+    val wsTab = Share.once(
+      TextMetrics.rakeWordScores(hist, "text", stops), "rakeWordScores")
     val incoming = docs.filter(col("doc_id") % 10 === 0)
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => r.getLong(0) -> ((r.getLong(1),
@@ -1314,8 +1314,8 @@ class StreamingSpec extends SparkTestBase with Matchers {
       .select("doc_id", "text")
     val hist = docs.filter(col("doc_id") % 10 =!= 0)
     val incoming = docs.filter(col("doc_id") % 10 === 0)
-    val index = Dedup.shingleHashRows(hist, "doc_id", "text", 3)
-      .localCheckpoint()
+    val index = Share.once(
+      Dedup.shingleHashRows(hist, "doc_id", "text", 3), "shingleIndex")
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
@@ -1359,8 +1359,8 @@ class StreamingSpec extends SparkTestBase with Matchers {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val hist = emb.filter(col("vec_id") % 10 =!= 0)
     val incoming = emb.filter(col("vec_id") % 10 === 0)
-    val index = Dedup.embeddingCodeRows(hist, "vec_id", "e", planes)
-      .localCheckpoint()
+    val index = Share.once(
+      Dedup.embeddingCodeRows(hist, "vec_id", "e", planes), "codeIndex")
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val batch = keyed(Dedup.embeddingNearDupAgainstIndex(
@@ -1403,11 +1403,11 @@ class StreamingSpec extends SparkTestBase with Matchers {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val hist = emb.filter(col("vec_id") % 10 =!= 0)
     val probes = emb.filter(col("vec_id") % 10 === 0)
-    val cents = Similarity.kmeansCentroids(hist, "vec_id", "e",
+    val cents = Share.once(Similarity.kmeansCentroids(hist, "vec_id", "e",
         centroidStride = 37, iters = 1, dim = 64)
-      .select(col("__cid"), col("__cv")).localCheckpoint()
-    val cells = Similarity.ivfCellIndex(hist, "vec_id", "e", cents)
-      .localCheckpoint()
+      .select(col("__cid"), col("__cv")), "ivfCentroids")
+    val cells = Share.once(
+      Similarity.ivfCellIndex(hist, "vec_id", "e", cents), "ivfCells")
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getInt(3)) ->
         ((r.getLong(1), r.getDouble(2)))).toMap
@@ -1446,12 +1446,12 @@ class StreamingSpec extends SparkTestBase with Matchers {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val hist = emb.filter(col("vec_id") % 10 =!= 0)
     val probes = emb.filter(col("vec_id") % 10 === 0)
-    val coarse = Similarity.strideCentroids(hist, "vec_id", "e",
-      centroidStride = 37).localCheckpoint()
-    val book = Similarity.pqTrain(hist, "vec_id", "e", m = 4, dim = 64,
-      centroidStride = 37, iters = 1).localCheckpoint()
-    val cells = Similarity.pqCodeCells(hist, "vec_id", "e", coarse, book,
-      m = 4, dim = 64).localCheckpoint()
+    val coarse = Share.once(Similarity.strideCentroids(hist, "vec_id", "e",
+      centroidStride = 37), "ivfCoarse")
+    val book = Share.once(Similarity.pqTrain(hist, "vec_id", "e", m = 4,
+      dim = 64, centroidStride = 37, iters = 1), "pqCodebook")
+    val cells = Share.once(Similarity.pqCodeCells(hist, "vec_id", "e",
+      coarse, book, m = 4, dim = 64), "pqCodeCells")
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getInt(3)) ->
         ((r.getLong(1), r.getLong(2)))).toMap

@@ -3,11 +3,21 @@
 per-query ratio (B/A), the overlap median/quartiles, and the worst
 movers. The r14 'is the bench comparable round-over-round' readout.
 
+With --touched, the queries a change touched are read against the
+untouched ones run in the same pair of benches (the control floor):
+the geomean B/A of each set, touched / control, and the control
+ratios' own Q1-Q3 band divided by the control geomean. A touched /
+control inside that band is a move the box also makes on code it did
+not touch.
+
 Usage: bench_compare.py <benchA.json> <benchB.json> [topN=8]
+                        [--touched q148,q272_textrank,...]
+A touched name matches a query by its full name or its `qNNN` prefix.
 """
+import argparse
 import json
+import math
 import statistics
-import sys
 
 
 def load(p):
@@ -15,7 +25,29 @@ def load(p):
         return json.loads(f.read())
 
 
-def main(a_path, b_path, top_n=8):
+def geomean(xs):
+    return math.exp(sum(math.log(x) for x in xs) / len(xs))
+
+
+def is_touched(query, touched):
+    return any(query == t or query.startswith(t + "_") for t in touched)
+
+
+def control_floor(ratios, touched):
+    """The touched-vs-control readout over per-query B/A ratios, or None
+    when either set is empty."""
+    hit = [r for q, r in ratios.items() if is_touched(q, touched)]
+    ctl = sorted(r for q, r in ratios.items() if not is_touched(q, touched))
+    if not hit or not ctl:
+        return None
+    t, c = geomean(hit), geomean(ctl)
+    lo, hi = ctl[len(ctl) // 4] / c, ctl[(3 * len(ctl)) // 4] / c
+    return {"n_touched": len(hit), "n_control": len(ctl),
+            "touched": t, "control": c, "touched_over_control": t / c,
+            "band": (lo, hi), "in_band": lo <= t / c <= hi}
+
+
+def main(a_path, b_path, top_n=8, touched=None):
     a, b = load(a_path), load(b_path)
     qa, qb = a["queries"], b["queries"]
     shared = sorted(set(qa) & set(qb))
@@ -70,6 +102,18 @@ def main(a_path, b_path, top_n=8):
                              for d in dirty)
             print(f"WARNING {label} has out-of-band chunks after the "
                   f"probe gate: {desc}")
+    if touched:
+        cf = control_floor(ratios, touched)
+        if cf is None:
+            print("control floor: needs both touched and untouched queries")
+        else:
+            lo, hi = cf["band"]
+            print(f"touched n={cf['n_touched']}  geomean B/A={cf['touched']:.3f}")
+            print(f"control n={cf['n_control']}  geomean B/A={cf['control']:.3f}"
+                  "  (the control floor)")
+            print(f"touched / control = {cf['touched_over_control']:.3f}  "
+                  f"control Q1-Q3 band {lo:.3f}-{hi:.3f}: "
+                  f"{'inside' if cf['in_band'] else 'OUTSIDE'}")
     movers = sorted(ratios.items(), key=lambda kv: kv[1])
     print("fastest (B vs A):")
     for q, r in movers[:top_n]:
@@ -80,5 +124,12 @@ def main(a_path, b_path, top_n=8):
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2],
-         int(sys.argv[3]) if len(sys.argv) > 3 else 8)
+    ap = argparse.ArgumentParser()
+    ap.add_argument("a")
+    ap.add_argument("b")
+    ap.add_argument("top_n", nargs="?", type=int, default=8)
+    ap.add_argument("--touched", default="",
+                    help="comma-separated query names the change touched")
+    args = ap.parse_args()
+    main(args.a, args.b, args.top_n,
+         [t for t in args.touched.split(",") if t])
